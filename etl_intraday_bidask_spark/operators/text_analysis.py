@@ -297,11 +297,15 @@ def _corpus_doc_count(spark: SparkSession, sf_dir: str) -> int:
         n = 0
         for frag in frags:
             md = frag.metadata  # parquet footer of this fragment
-            col_idx = md.schema.to_arrow_schema().get_field_index("doc_id")
-            if col_idx < 0:
-                raise ValueError("no doc_id column")
             for rg in range(md.num_row_groups):
-                stats = md.row_group(rg).column(col_idx).statistics
+                # Match the parquet leaf by path: nested columns make the
+                # Arrow field index differ from the leaf column index.
+                row_group = md.row_group(rg)
+                cols = [row_group.column(i) for i in range(row_group.num_columns)]
+                doc_ids = [c for c in cols if c.path_in_schema == "doc_id"]
+                if not doc_ids:
+                    raise ValueError("no doc_id column")
+                stats = doc_ids[0].statistics
                 if stats is None or stats.null_count is None:
                     raise ValueError("doc_id statistics missing")
                 if stats.null_count > 0:
@@ -311,11 +315,12 @@ def _corpus_doc_count(spark: SparkSession, sf_dir: str) -> int:
     except Exception:
         # True declared semantic, no footer shortcut: one distinct
         # aggregation (cheap next to the scan it shares a job with).
+        # countDistinct skips NULLs like SQL COUNT(DISTINCT); a
+        # distinct().count() would count the NULL row as one more doc.
         return (
             load(spark, sf_dir, "documents")
-            .select("doc_id")
-            .distinct()
-            .count()
+            .agg(F.countDistinct("doc_id"))
+            .first()[0]
         )
 
 

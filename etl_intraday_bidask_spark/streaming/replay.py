@@ -27,6 +27,7 @@ from etl_intraday_bidask_spark.functions.parity import exact_avg, exact_sum
 from etl_intraday_bidask_spark.tables import (
     ensure_session_confs,
     normalize_event_time,
+    read_parquet,
     scratch_dir,
 )
 
@@ -49,10 +50,11 @@ def _read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events.parquet as a bounded stream with ts normalized to µs."""
     ensure_session_confs(spark)
     # Streaming sources need an explicit schema; take it from the batch
-    # reader, then normalize ts from whatever physical shape the fixture
-    # currently has (long nanos / NTZ µs / tz µs) — same canonicalization
-    # as tables.load, derived from the actual schema, not assumed.
-    batch_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    # reader (the file's footer, no Spark job), then normalize ts from
+    # whatever physical shape the fixture currently has (long nanos /
+    # NTZ µs / tz µs) — same canonicalization as tables.load, derived
+    # from the actual schema, not assumed.
+    batch_schema = read_parquet(spark, f"{sf_dir}/events.parquet").schema
     raw = spark.readStream.schema(batch_schema).parquet(_stage_dir(sf_dir))
     return normalize_event_time(raw, "ts")
 

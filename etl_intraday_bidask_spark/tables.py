@@ -1,12 +1,23 @@
 """Table loaders — schema-on-read from Parquet footers.
 
-All ten fixture tables (FIXTURES.md) load via ``spark.read.parquet``;
-Spark's vectorized reader + Catalyst give predicate pushdown and column
-pruning for free, so loaders stay thin. At data-lake scale the same call
-points at a partitioned S3 prefix and partition pruning applies.
+All ten fixture tables (FIXTURES.md) load through :func:`read_parquet`,
+which reads the file's parquet footer on the driver with pyarrow, builds
+the Spark read schema from its leaf columns and hands it to
+``spark.read.schema(...)`` — so a load runs no Spark job. Files whose
+layout Spark's own converter would read differently (unmapped types,
+Spark-written files, directories, non-local paths) fall back to
+``spark.read.parquet``'s schema-inference job, unchanged. Spark's
+vectorized reader + Catalyst give predicate pushdown and column pruning
+for free either way, so loaders stay thin. At data-lake scale the same
+call points at a partitioned S3 prefix (the inference fallback) and
+partition pruning applies.
 """
 
 from __future__ import annotations
+
+import json
+import os
+import re
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
@@ -40,9 +51,130 @@ def ensure_session_confs(spark: SparkSession) -> None:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
 
 
-# Per-session memos of loaded tables / registered views. ``spark.read.
-# parquet`` costs a driver-side file listing + footer/schema read plus
-# several py4j round trips on EVERY call — measured 80-290 ms of pure
+# Footer key under which Spark stores its own row schema. Spark reads
+# such files through that schema (char/varchar, UDTs), not the parquet
+# types, so they always take the inference fallback.
+_SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
+
+# Unannotated parquet primitives and the Spark type they read as.
+_PLAIN_TYPES = {
+    "INT32": T.IntegerType(),
+    "INT64": T.LongType(),
+    "FLOAT": T.FloatType(),
+    "DOUBLE": T.DoubleType(),
+    "BOOLEAN": T.BooleanType(),
+}
+
+# The two lines pyarrow prints for the head of a standard 3-level list
+# column: a LIST-annotated top-level group whose child is the repeated
+# group ``list``, e.g.
+#   "  optional group field_id=-1 embedding (List) {"
+#   "    repeated group field_id=-1 list {"
+_LIST_HEAD = re.compile(
+    r"  (?:optional|required) group field_id=-?\d+ (.+) \(List\) \{$"
+)
+_LIST_REPEATED = re.compile(r"    repeated group field_id=-?\d+ list \{$")
+
+
+def _conf_on(spark: SparkSession, key: str) -> bool:
+    return spark.conf.get(key).strip().lower() == "true"
+
+
+def _leaf_type(col, nanos_as_long: bool, infer_ntz: bool) -> T.DataType | None:
+    """The Spark type Spark's parquet converter gives one leaf column
+    (pyarrow ``ColumnSchema``), or None outside the mapped set."""
+    physical, logical = col.physical_type, col.logical_type.type
+    if logical == "NONE":
+        return _PLAIN_TYPES.get(physical)
+    if (physical, logical) == ("BYTE_ARRAY", "STRING"):
+        return T.StringType()
+    if (physical, logical) == ("INT32", "DATE"):
+        return T.DateType()
+    if (physical, logical) == ("INT64", "TIMESTAMP"):
+        ts = json.loads(col.logical_type.to_json())
+        if ts["timeUnit"] == "nanoseconds":
+            return T.LongType() if nanos_as_long else None
+        if ts["isAdjustedToUTC"] or not infer_ntz:
+            return T.TimestampType()
+        return T.TimestampNTZType()
+    return None
+
+
+def _footer_schema(spark: SparkSession, path: str) -> T.StructType | None:
+    """The schema ``spark.read.parquet(path)`` would infer, built from
+    the file's footer on the driver — or None when :func:`read_parquet`
+    must fall back to inference: ``path`` is not a plain local regular
+    file (Spark would glob, resolve a scheme or skip a hidden name), the
+    footer does not read, the file is Spark-written, or a column is
+    outside the mapped types."""
+    if (
+        re.search(r"[:*?\[\]{}\\]", path)
+        or os.path.basename(path).startswith(("_", "."))
+        or not os.path.isfile(path)
+    ):
+        return None
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    try:
+        md = pq.read_metadata(path)
+    except (OSError, pa.ArrowException):
+        # Not a readable parquet footer: inference raises Spark's error.
+        return None
+    if _SPARK_ROW_METADATA in (md.metadata or {}):
+        return None
+    nanos_as_long = _conf_on(spark, "spark.sql.legacy.parquet.nanosAsLong")
+    infer_ntz = _conf_on(spark, "spark.sql.parquet.inferTimestampNTZ.enabled")
+    lines = str(md.schema).splitlines()
+    list_heads = {
+        m.group(1)
+        for head, child in zip(lines, lines[1:])
+        if (m := _LIST_HEAD.match(head)) and _LIST_REPEATED.match(child)
+    }
+    fields = []
+    for i in range(len(md.schema)):
+        col = md.schema.column(i)
+        dtype = _leaf_type(col, nanos_as_long, infer_ntz)
+        if dtype is None:
+            return None
+        head = col.path.removesuffix(".list.element")
+        if col.max_repetition_level == 0 and col.path == col.name:
+            name = col.name
+        elif (
+            col.max_repetition_level == 1
+            and col.name == "element"
+            and head in list_heads
+        ):
+            name, dtype = head, T.ArrayType(dtype, True)
+        else:
+            return None
+        # File sources read every field as nullable.
+        fields.append(T.StructField(name, dtype, True))
+    return T.StructType(fields) if fields else None
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` without its schema-inference job.
+
+    Bare ``spark.read.parquet`` runs one Spark job only to read the
+    footer (~100 ms of dispatch at fixture scale). This reads the footer
+    on the driver instead, following the two session confs Spark's
+    converter follows (``spark.sql.legacy.parquet.nanosAsLong``,
+    ``spark.sql.parquet.inferTimestampNTZ.enabled``), and passes the
+    schema to ``spark.read.schema``. Mapped: unannotated INT32/INT64/
+    FLOAT/DOUBLE/BOOLEAN, UTF8 strings, DATE, ms/µs TIMESTAMP
+    (``timestamp`` when adjusted to UTC, else ``timestamp_ntz``), ns
+    TIMESTAMP under nanosAsLong, and standard 3-level lists of those.
+    Anything else takes the inference path unchanged.
+    """
+    schema = _footer_schema(spark, path)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(path)
+
+
+# Per-session memos of loaded tables / registered views. A parquet read
+# costs a driver-side file listing + footer/schema read plus several
+# py4j round trips on EVERY call — measured 80-290 ms of pure
 # plan-construction time per bench query. Fixture tables are static,
 # and a DataFrame is an immutable logical plan, so reusing one per
 # (session, dir, table) is semantics-free.
@@ -145,7 +277,7 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if (sf_dir, name) in memo:
         return memo[(sf_dir, name)]
     ensure_session_confs(spark)
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df = read_parquet(spark, f"{sf_dir}/{name}.parquet")
     if name == "events":
         df = normalize_event_time(df, "ts")
     for col in _NTZ_DATE_COLS.get(name, ()):
