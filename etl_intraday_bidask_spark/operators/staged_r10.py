@@ -1,14 +1,12 @@
-"""STAGED round-10 operators (wave F seeds) — implemented and
-parity-tested, NOT registered, NOT part of any earlier activation
-window (waves B-E own rounds 6-9).
+"""Wave-F operators (SURVEY.md §2.32).
 
-Theme seeds: operational streaming correctness (checkpoint recovery —
+Themes: operational streaming correctness (checkpoint recovery —
 the exactly-once-across-restart proof), geospatial primitives on
 deterministic synthetic coordinates, survival analysis, sequential
 experimentation bounds, inventory planning, and the Markov stationary
-distribution. Same staging contract as ``staged_r6/7/8/9``: own
-``STAGED_R10`` dict + leak guard, exact integer/ppm arithmetic,
-nullif-guarded divisions, quantized irrationals, scale note per op.
+distribution. Same house discipline as ``staged_r6/7/8/9``: exact
+integer/ppm arithmetic, nullif-guarded divisions, quantized
+irrationals, scale note per op.
 """
 
 from __future__ import annotations
@@ -18,24 +16,13 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from etl_intraday_bidask_spark.functions.parity import scaled_long
-from etl_intraday_bidask_spark.registry import QuerySpec, SparkFn
+from etl_intraday_bidask_spark.registry import register
 from etl_intraday_bidask_spark.tables import load, scratch_dir
-
-STAGED_R10: dict[str, QuerySpec] = {}
-
-
-def staged10(name: str, oracle_sql: str | None, description: str = ""):
-    def deco(fn: SparkFn) -> SparkFn:
-        STAGED_R10[name] = QuerySpec(name, fn, oracle_sql, description)
-        return fn
-
-    return deco
-
 
 _RECOVERY_CACHE: dict[str, list] = {}
 
 
-@staged10(
+@register(
     "stream_checkpoint_recovery",
     oracle_sql="""
         SELECT event_type,
@@ -130,7 +117,7 @@ def stream_checkpoint_recovery(
     ).orderBy("event_type")
 
 
-@staged10(
+@register(
     "geo_haversine_nearest_hub",
     oracle_sql="""
         WITH pts AS (
@@ -241,7 +228,7 @@ def geo_haversine_nearest_hub(
     )
 
 
-@staged10(
+@register(
     "events_kaplan_meier_weekly",
     oracle_sql="""
         WITH firsts AS (
@@ -399,7 +386,7 @@ def events_kaplan_meier_weekly(
     ).orderBy("week_k")
 
 
-@staged10(
+@register(
     "ab_sequential_bound_check",
     oracle_sql="""
         WITH assigned AS (
@@ -519,7 +506,7 @@ def ab_sequential_bound_check(
     ).orderBy("look_k")
 
 
-@staged10(
+@register(
     "parts_safety_stock_plan",
     oracle_sql="""
         WITH daily AS (
@@ -601,7 +588,7 @@ def parts_safety_stock_plan(
     ).orderBy("l_partkey")
 
 
-@staged10(
+@register(
     "events_markov_stationary",
     oracle_sql="""
         WITH seq AS (
@@ -711,7 +698,7 @@ def events_markov_stationary(
     ).orderBy("state")
 
 
-@staged10(
+@register(
     "geo_gridcell_density_pyramid",
     oracle_sql="""
         WITH pts AS (
@@ -785,7 +772,7 @@ def geo_gridcell_density_pyramid(
 _STATE_METRICS_CACHE: dict[str, list] = {}
 
 
-@staged10(
+@register(
     "stream_state_store_metrics",
     oracle_sql=None,
     description="State-store observability: a watermarked streaming "
@@ -854,7 +841,7 @@ def stream_state_store_metrics(
     ).orderBy("batch_id", "operator", "state_rows_total")
 
 
-@staged10(
+@register(
     "geo_point_in_zone_rect",
     oracle_sql="""
         WITH pts AS (
@@ -945,7 +932,7 @@ def geo_point_in_zone_rect(
     )
 
 
-@staged10(
+@register(
     "geo_bounding_box_per_nation",
     oracle_sql="""
         WITH pts AS (
@@ -1007,7 +994,7 @@ def geo_bounding_box_per_nation(
     )
 
 
-@staged10(
+@register(
     "parts_eoq_reorder_point",
     oracle_sql="""
         WITH daily AS (
@@ -1083,7 +1070,7 @@ def parts_eoq_reorder_point(
     ).orderBy("l_partkey")
 
 
-@staged10(
+@register(
     "orders_promo_cannibalization",
     oracle_sql="""
         WITH flagged AS (
@@ -1160,7 +1147,7 @@ def orders_promo_cannibalization(
 _INCR_BATCH_CACHE: dict[str, list] = {}
 
 
-@staged10(
+@register(
     "stream_incremental_batches",
     oracle_sql="""
         WITH thirds AS (
@@ -1238,7 +1225,7 @@ def stream_incremental_batches(
     ).orderBy("batch_id")
 
 
-@staged10(
+@register(
     "bidask_glosten_harris_decomp",
     oracle_sql="""
         WITH signed AS (
@@ -1410,7 +1397,7 @@ def bidask_glosten_harris_decomp(
     )
 
 
-@staged10(
+@register(
     "orders_repurchase_interval",
     oracle_sql="""
         WITH gaps AS (
@@ -1475,7 +1462,7 @@ def orders_repurchase_interval(
     )
 
 
-@staged10(
+@register(
     "graph_degree_assortativity",
     oracle_sql="""
         WITH buckets AS (
@@ -1592,7 +1579,7 @@ def graph_degree_assortativity(
     )
 
 
-@staged10(
+@register(
     "eval_demographic_parity_80pct",
     oracle_sql="""
         WITH scored AS (
@@ -1665,7 +1652,7 @@ def eval_demographic_parity_80pct(
     )
 
 
-@staged10(
+@register(
     "eval_equalized_odds_gap",
     oracle_sql="""
         WITH scored AS (
@@ -1756,7 +1743,7 @@ def eval_equalized_odds_gap(
     )
 
 
-@staged10(
+@register(
     "sessionize_dwell_profile",
     oracle_sql="""
         WITH seq AS (
@@ -1823,7 +1810,7 @@ def sessionize_dwell_profile(
     )
 
 
-@staged10(
+@register(
     "dq_range_contract_audit",
     oracle_sql="""
         WITH contracts(col_name, lo, hi) AS (VALUES
@@ -1924,7 +1911,7 @@ def dq_range_contract_audit(
     )
 
 
-@staged10(
+@register(
     "embed_whiten_variance_audit",
     oracle_sql="""
         WITH exp AS (
@@ -2033,7 +2020,7 @@ def embed_whiten_variance_audit(
     )
 
 
-@staged10(
+@register(
     "embed_random_projection_jl",
     oracle_sql="""
         WITH exp AS (
@@ -2157,7 +2144,7 @@ def embed_random_projection_jl(
     )
 
 
-@staged10(
+@register(
     "text_compression_ratio_proxy",
     oracle_sql="""
         WITH toks AS (
@@ -2226,7 +2213,7 @@ def text_compression_ratio_proxy(
     )
 
 
-@staged10(
+@register(
     "multimodal_fixed_chunking",
     oracle_sql="""
         WITH blobs AS (
@@ -2292,7 +2279,7 @@ def multimodal_fixed_chunking(
     )
 
 
-@staged10(
+@register(
     "ts_stl_anomaly_days",
     oracle_sql="""
         WITH daily AS (
@@ -2373,7 +2360,7 @@ def ts_stl_anomaly_days(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("rk")
 
 
-@staged10(
+@register(
     "orders_basket_size_profile",
     oracle_sql="""
         WITH baskets AS (
@@ -2434,7 +2421,7 @@ def orders_basket_size_profile(
     )
 
 
-@staged10(
+@register(
     "orders_customer_hhi_by_nation",
     oracle_sql="""
         WITH rev AS (
@@ -2500,7 +2487,7 @@ def orders_customer_hhi_by_nation(
     )
 
 
-@staged10(
+@register(
     "events_funnel_by_dow",
     oracle_sql="""
         WITH reach AS (
@@ -2589,7 +2576,7 @@ def events_funnel_by_dow(
     )
 
 
-@staged10(
+@register(
     "dq_price_consistency_audit",
     oracle_sql="""
         WITH joined AS (
@@ -2671,7 +2658,7 @@ def dq_price_consistency_audit(
     )
 
 
-@staged10(
+@register(
     "sql_null_handling_census",
     oracle_sql="""
         WITH src AS (
@@ -2730,7 +2717,7 @@ def sql_null_handling_census(
     )
 
 
-@staged10(
+@register(
     "sql_calendar_edge_cases",
     oracle_sql="""
         WITH bases(tag, d) AS (VALUES
@@ -2784,7 +2771,7 @@ def sql_calendar_edge_cases(
     ).orderBy("tag")
 
 
-@staged10(
+@register(
     "orders_cohort_ltv_curve",
     oracle_sql="""
         WITH cohort AS (
@@ -2879,7 +2866,7 @@ def orders_cohort_ltv_curve(
     )
 
 
-@staged10(
+@register(
     "eval_precision_at_k_curve",
     oracle_sql="""
         WITH scored AS (
@@ -2971,7 +2958,7 @@ def eval_precision_at_k_curve(
     ).orderBy("k")
 
 
-@staged10(
+@register(
     "eval_score_histogram_by_class",
     oracle_sql="""
         WITH scored AS (
@@ -3031,7 +3018,7 @@ def eval_score_histogram_by_class(
     )
 
 
-@staged10(
+@register(
     "geo_distance_decay_demand",
     oracle_sql="""
         WITH pts AS (
@@ -3166,7 +3153,7 @@ def geo_distance_decay_demand(
     )
 
 
-@staged10(
+@register(
     "graph_edge_weight_distribution",
     oracle_sql="""
         WITH pair_counts AS (
@@ -3229,7 +3216,7 @@ def graph_edge_weight_distribution(
     )
 
 
-@staged10(
+@register(
     "events_activity_powerlaw_fit",
     oracle_sql="""
         WITH activity AS (
@@ -3316,7 +3303,7 @@ def events_activity_powerlaw_fit(
     )
 
 
-@staged10(
+@register(
     "corpus_quality_length_matrix",
     oracle_sql="""
         WITH flagged AS (
@@ -3369,7 +3356,7 @@ def corpus_quality_length_matrix(
     )
 
 
-@staged10(
+@register(
     "part_brand_price_dispersion",
     oracle_sql="""
         WITH prices AS (
@@ -3435,7 +3422,7 @@ def part_brand_price_dispersion(
     ).orderBy("p_brand")
 
 
-@staged10(
+@register(
     "orders_growth_contribution",
     oracle_sql="""
         WITH monthly AS (
@@ -3524,7 +3511,7 @@ def orders_growth_contribution(
     )
 
 
-@staged10(
+@register(
     "events_session_velocity_audit",
     oracle_sql="""
         WITH seq AS (
@@ -3625,7 +3612,7 @@ def events_session_velocity_audit(
     )
 
 
-@staged10(
+@register(
     "bidask_donchian_channel_daily",
     oracle_sql="""
         WITH trades AS (
@@ -3733,7 +3720,7 @@ def bidask_donchian_channel_daily(
     )
 
 
-@staged10(
+@register(
     "parts_demand_intermittency",
     oracle_sql="""
         WITH daily AS (
@@ -3824,7 +3811,7 @@ def parts_demand_intermittency(
     )
 
 
-@staged10(
+@register(
     "events_simpson_diversity",
     oracle_sql="""
         WITH cells AS (
@@ -3883,7 +3870,7 @@ def events_simpson_diversity(
     )
 
 
-@staged10(
+@register(
     "corpus_source_syndication_matrix",
     oracle_sql="""
         WITH hashed AS (
@@ -3982,7 +3969,7 @@ def corpus_source_syndication_matrix(
     )
 
 
-@staged10(
+@register(
     "sql_set_dedup_semantics",
     oracle_sql="""
         WITH a AS (
@@ -4046,7 +4033,7 @@ def sql_set_dedup_semantics(
     )
 
 
-@staged10(
+@register(
     "orders_dow_anova_fstat",
     oracle_sql="""
         WITH daily AS (
@@ -4161,7 +4148,7 @@ def orders_dow_anova_fstat(
     )
 
 
-@staged10(
+@register(
     "stream_watermark_delay_sweep",
     oracle_sql="""
         WITH bounds AS (
@@ -4224,7 +4211,7 @@ def stream_watermark_delay_sweep(
     )
 
 
-@staged10(
+@register(
     "eval_threshold_capacity_planner",
     oracle_sql="""
         WITH scored AS (
@@ -4295,7 +4282,7 @@ def eval_threshold_capacity_planner(
     )
 
 
-@staged10(
+@register(
     "events_user_temporal_entropy",
     oracle_sql="""
         WITH cells AS (

@@ -1,8 +1,4 @@
-"""STAGED round-11 operators (wave G, 50 ops) — implemented and
-parity-tested at sf0.001/0.01/0.1, NOT registered, NOT part of the
-wave B-F windows (rounds 6-10). Same staging contract as
-staged_r6..r10: own ``STAGED_R11`` dict + leak guard
-(tests/test_staged_r11.py).
+"""Wave-G operators (SURVEY.md §2.33).
 
 Themes: SQL-surface semantics (VALUES dims, NOT-IN null traps,
 full-outer reconciliation), exact nonparametric statistics
@@ -26,21 +22,10 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from etl_intraday_bidask_spark.functions.parity import scaled_long
-from etl_intraday_bidask_spark.registry import QuerySpec, SparkFn
+from etl_intraday_bidask_spark.registry import register
 from etl_intraday_bidask_spark.tables import load
 
-STAGED_R11: dict[str, QuerySpec] = {}
-
-
-def staged11(name: str, oracle_sql: str | None, description: str = ""):
-    def deco(fn: SparkFn) -> SparkFn:
-        STAGED_R11[name] = QuerySpec(name, fn, oracle_sql, description)
-        return fn
-
-    return deco
-
-
-@staged11(
+@register(
     "orders_rfm_migration_matrix",
     oracle_sql="""
         WITH spend AS (
@@ -123,7 +108,7 @@ def orders_rfm_migration_matrix(
     ).orderBy("tier_1995", "tier_1996")
 
 
-@staged11(
+@register(
     "text_bigram_xent_split",
     oracle_sql="""
         WITH split AS (
@@ -254,7 +239,7 @@ def text_bigram_xent_split(
     )
 
 
-@staged11(
+@register(
     "ts_changepoint_two_level",
     oracle_sql="""
         WITH daily AS (
@@ -406,7 +391,7 @@ def ts_changepoint_two_level(
     ).orderBy("segment_side")
 
 
-@staged11(
+@register(
     "sql_values_inline_table",
     oracle_sql="""
         SELECT tier,
@@ -453,7 +438,7 @@ def sql_values_inline_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged11(
+@register(
     "join_full_outer_reconcile",
     oracle_sql="""
         WITH a AS (
@@ -519,7 +504,7 @@ def join_full_outer_reconcile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged11(
+@register(
     "subquery_not_in_null_trap",
     oracle_sql="""
         WITH probe AS (
@@ -574,7 +559,7 @@ def subquery_not_in_null_trap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged11(
+@register(
     "agg_trimmed_mean_exact",
     oracle_sql="""
         WITH ranked AS (
@@ -641,7 +626,7 @@ def agg_trimmed_mean_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged11(
+@register(
     "agg_geometric_mean_ln",
     oracle_sql="""
         WITH q AS (
@@ -692,7 +677,7 @@ def agg_geometric_mean_ln(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged11(
+@register(
     "agg_mann_whitney_u_exact",
     oracle_sql="""
         WITH s AS (
@@ -777,7 +762,7 @@ def agg_mann_whitney_u_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged11(
+@register(
     "agg_mutual_information_priority_status",
     oracle_sql="""
         WITH joint AS (
@@ -856,7 +841,7 @@ def agg_mutual_information_priority_status(
     )
 
 
-@staged11(
+@register(
     "dq_functional_dependency_audit",
     oracle_sql="""
         WITH fd1 AS (
@@ -921,7 +906,7 @@ def dq_functional_dependency_audit(
     )
 
 
-@staged11(
+@register(
     "orders_backlog_timeseries",
     oracle_sql="""
         WITH span AS (
@@ -989,7 +974,7 @@ def orders_backlog_timeseries(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("month_us")
 
 
-@staged11(
+@register(
     "orders_new_vs_repeat_monthly",
     oracle_sql="""
         WITH flagged AS (
@@ -1058,7 +1043,7 @@ def orders_new_vs_repeat_monthly(
     )
 
 
-@staged11(
+@register(
     "orders_fiscal_445_calendar",
     oracle_sql="""
         WITH fiscal AS (
@@ -1131,7 +1116,7 @@ def orders_fiscal_445_calendar(
     )
 
 
-@staged11(
+@register(
     "orders_net_revenue_retention",
     oracle_sql="""
         WITH cy AS (
@@ -1201,7 +1186,7 @@ def orders_net_revenue_retention(
     )
 
 
-@staged11(
+@register(
     "orders_quarter_end_concentration",
     oracle_sql="""
         SELECT CAST(year(o_orderdate) AS BIGINT) AS y,
@@ -1256,7 +1241,7 @@ def orders_quarter_end_concentration(
     )
 
 
-@staged11(
+@register(
     "orders_price_index_laspeyres",
     oracle_sql="""
         WITH py AS (
@@ -1336,7 +1321,7 @@ def orders_price_index_laspeyres(
     )
 
 
-@staged11(
+@register(
     "parts_supplier_concentration",
     oracle_sql="""
         WITH ps AS (
@@ -1406,7 +1391,7 @@ def parts_supplier_concentration(
     )
 
 
-@staged11(
+@register(
     "events_stickiness_dau_wau",
     oracle_sql="""
         WITH du AS (
@@ -1476,7 +1461,7 @@ def events_stickiness_dau_wau(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged11(
+@register(
     "events_session_bounce_rate",
     oracle_sql="""
         WITH gaps AS (
@@ -1581,7 +1566,7 @@ def events_session_bounce_rate(
     )
 
 
-@staged11(
+@register(
     "events_interval_union_coverage",
     oracle_sql="""
         WITH iv AS (
@@ -1684,7 +1669,7 @@ def events_interval_union_coverage(
     )
 
 
-@staged11(
+@register(
     "sessionize_timeout_sensitivity",
     oracle_sql="""
         WITH gaps AS (
@@ -1781,7 +1766,7 @@ def sessionize_timeout_sensitivity(
     )
 
 
-@staged11(
+@register(
     "graph_reciprocity_directed",
     oracle_sql="""
         WITH seq AS (
@@ -1860,7 +1845,7 @@ def graph_reciprocity_directed(
     )
 
 
-@staged11(
+@register(
     "dq_error_rate_wilson_bound",
     oracle_sql="""
         WITH daily AS (
@@ -1922,7 +1907,7 @@ def dq_error_rate_wilson_bound(
     ).orderBy("day_us")
 
 
-@staged11(
+@register(
     "text_hapax_legomena_ratio",
     oracle_sql="""
         WITH tc AS (
@@ -1977,7 +1962,7 @@ def text_hapax_legomena_ratio(
     )
 
 
-@staged11(
+@register(
     "corpus_js_divergence_sources",
     oracle_sql="""
         WITH tc AS (
@@ -2107,7 +2092,7 @@ def corpus_js_divergence_sources(
     )
 
 
-@staged11(
+@register(
     "text_vocab_coverage_topk",
     oracle_sql="""
         WITH types AS (
@@ -2179,7 +2164,7 @@ def text_vocab_coverage_topk(
     )
 
 
-@staged11(
+@register(
     "text_term_burstiness_fano",
     oracle_sql="""
         WITH nd AS (
@@ -2282,7 +2267,7 @@ def text_term_burstiness_fano(
     )
 
 
-@staged11(
+@register(
     "text_cdc_chunk_boundaries",
     oracle_sql="""
         WITH toks AS (
@@ -2381,7 +2366,7 @@ def text_cdc_chunk_boundaries(
     )
 
 
-@staged11(
+@register(
     "text_token_length_histogram",
     oracle_sql="""
         WITH toks AS (
@@ -2432,7 +2417,7 @@ def text_token_length_histogram(
     ).orderBy("lang", "len_bucket")
 
 
-@staged11(
+@register(
     "embed_kcenter_greedy_init",
     oracle_sql="""
         WITH exp AS (
@@ -2560,7 +2545,7 @@ def embed_kcenter_greedy_init(
     )
 
 
-@staged11(
+@register(
     "embed_simhash_bit_balance",
     oracle_sql="""
         WITH exp AS (
@@ -2670,7 +2655,7 @@ def embed_simhash_bit_balance(
     )
 
 
-@staged11(
+@register(
     "knn_norm_bound_prune",
     oracle_sql="""
         WITH exp AS (
@@ -2788,7 +2773,7 @@ def knn_norm_bound_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged11(
+@register(
     "multimodal_aspect_bucket_stats",
     oracle_sql="""
         WITH media AS (
@@ -2848,7 +2833,7 @@ def multimodal_aspect_bucket_stats(
     )
 
 
-@staged11(
+@register(
     "multimodal_byte_entropy",
     oracle_sql="""
         WITH hx AS (
@@ -2934,7 +2919,7 @@ def multimodal_byte_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged11(
+@register(
     "ts_peak_prominence_daily",
     oracle_sql="""
         WITH daily AS (
@@ -3010,7 +2995,7 @@ def ts_peak_prominence_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged11(
+@register(
     "ts_runs_test_exact",
     oracle_sql="""
         WITH daily AS (
@@ -3091,7 +3076,7 @@ def ts_runs_test_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged11(
+@register(
     "ts_theil_sen_slope_daily",
     oracle_sql="""
         WITH daily AS (
@@ -3168,7 +3153,7 @@ def ts_theil_sen_slope_daily(
     )
 
 
-@staged11(
+@register(
     "ts_median3_smoother",
     oracle_sql="""
         WITH daily AS (
@@ -3228,7 +3213,7 @@ def ts_median3_smoother(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged11(
+@register(
     "bidask_impact_decay_profile",
     oracle_sql="""
         WITH px AS (
@@ -3323,7 +3308,7 @@ def bidask_impact_decay_profile(
     )
 
 
-@staged11(
+@register(
     "bidask_anchored_vwap_monthly",
     oracle_sql="""
         WITH px AS (
@@ -3404,7 +3389,7 @@ def bidask_anchored_vwap_monthly(
     )
 
 
-@staged11(
+@register(
     "eval_cohens_kappa_rules",
     oracle_sql="""
         WITH labeled AS (
@@ -3484,7 +3469,7 @@ def eval_cohens_kappa_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged11(
+@register(
     "eval_topk_overlap_champion",
     oracle_sql="""
         WITH spend AS (
@@ -3568,7 +3553,7 @@ def eval_topk_overlap_champion(
     )
 
 
-@staged11(
+@register(
     "etl_partition_backfill_plan",
     oracle_sql="""
         WITH pm AS (
@@ -3634,7 +3619,7 @@ def etl_partition_backfill_plan(
     )
 
 
-@staged11(
+@register(
     "etl_surrogate_key_stable",
     oracle_sql="""
         WITH full_combos AS (
@@ -3738,7 +3723,7 @@ def etl_surrogate_key_stable(
     )
 
 
-@staged11(
+@register(
     "scan_selectivity_census",
     oracle_sql="""
         WITH stats AS (
@@ -3821,7 +3806,7 @@ def scan_selectivity_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged11(
+@register(
     "graph_rich_club_topdeg",
     oracle_sql="""
         WITH buckets AS (
@@ -3929,7 +3914,7 @@ def graph_rich_club_topdeg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged11(
+@register(
     "win_rolling_percentile_rank",
     oracle_sql="""
         WITH monthly AS (
@@ -3998,7 +3983,7 @@ def win_rolling_percentile_rank(
     )
 
 
-@staged11(
+@register(
     "parts_substitute_pairs",
     oracle_sql="""
         WITH p AS (
@@ -4071,7 +4056,7 @@ def parts_substitute_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged11(
+@register(
     "lineitem_tax_discount_matrix",
     oracle_sql="""
         SELECT CAST(round(l_discount * 100) AS BIGINT) AS discount_pct,

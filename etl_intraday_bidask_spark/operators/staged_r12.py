@@ -1,10 +1,7 @@
-"""STAGED round-12 operators (wave H, target 50) — implemented and
-parity-tested, NOT registered, NOT part of the wave B-G windows
-(rounds 6-11). Same staging contract as staged_r6..r11: own
-``STAGED_R12`` dict + leak guard (tests/test_staged_r12.py).
+"""Wave-H operators (SURVEY.md §2.34).
 
-Staged from the SURVEY §7 M12 candidate list (round-7 design note),
-with stage-time revisions where the fixture made a candidate vacuous
+Built from the SURVEY §7 M12 candidate list (round-7 design note),
+with revisions where the fixture made a candidate vacuous
 (the corpus has no punctuation/digits/uppercase, no exact-duplicate
 texts, and referential integrity holds — ops over those surfaces
 either emit the positive form or were swapped for a candidate with
@@ -40,26 +37,15 @@ from etl_intraday_bidask_spark.functions.vector import (
     int_norm2,
     quantized,
 )
-from etl_intraday_bidask_spark.registry import QuerySpec, SparkFn
+from etl_intraday_bidask_spark.registry import register
 from etl_intraday_bidask_spark.tables import load, scratch_dir
-
-STAGED_R12: dict[str, QuerySpec] = {}
-
-
-def staged12(name: str, oracle_sql: str | None, description: str = ""):
-    def deco(fn: SparkFn) -> SparkFn:
-        STAGED_R12[name] = QuerySpec(name, fn, oracle_sql, description)
-        return fn
-
-    return deco
-
 
 # ---------------------------------------------------------------------------
 # SQL surface
 # ---------------------------------------------------------------------------
 
 
-@staged12(
+@register(
     "sql_distinct_on_emulation",
     oracle_sql="""
         SELECT DISTINCT ON (o_custkey)
@@ -96,7 +82,7 @@ def sql_distinct_on_emulation(
     )
 
 
-@staged12(
+@register(
     "sql_order_by_all_nulls",
     oracle_sql="""
         WITH daily AS (
@@ -156,7 +142,7 @@ def sql_order_by_all_nulls(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("event_type", "dom")
 
 
-@staged12(
+@register(
     "sql_exists_flag_projection",
     oracle_sql="""
         SELECT c_mktsegment,
@@ -203,7 +189,7 @@ def sql_exists_flag_projection(
     )
 
 
-@staged12(
+@register(
     "sql_listagg_distinct_sorted",
     oracle_sql="""
         SELECT n.n_name,
@@ -250,7 +236,7 @@ def sql_listagg_distinct_sorted(
 # ---------------------------------------------------------------------------
 
 
-@staged12(
+@register(
     "win_frame_exclude_current",
     oracle_sql="""
         SELECT event_id, user_id, cents,
@@ -310,7 +296,7 @@ def win_frame_exclude_current(
     )
 
 
-@staged12(
+@register(
     "win_nth_from_last",
     oracle_sql="""
         SELECT user_id,
@@ -365,7 +351,7 @@ def win_nth_from_last(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged12(
+@register(
     "win_reset_running_sum",
     oracle_sql="""
         WITH marked AS (
@@ -449,7 +435,7 @@ def win_reset_running_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("event_id")
 
 
-@staged12(
+@register(
     "win_mode_sliding",
     oracle_sql="""
         WITH numbered AS (
@@ -547,7 +533,7 @@ def win_mode_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@staged12(
+@register(
     "join_tier_range_dim",
     oracle_sql="""
         WITH bands(tier, lo, hi) AS (
@@ -604,7 +590,7 @@ def join_tier_range_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged12(
+@register(
     "join_neighbors_below_above",
     oracle_sql="""
         WITH u AS (
@@ -694,7 +680,7 @@ def join_neighbors_below_above(
     )
 
 
-@staged12(
+@register(
     "set_symmetric_diff_census",
     oracle_sql="""
         WITH flags AS (
@@ -776,7 +762,7 @@ def set_symmetric_diff_census(
     )
 
 
-@staged12(
+@register(
     "agg_kendall_tau_daily",
     oracle_sql="""
         WITH daily AS (
@@ -862,7 +848,7 @@ def agg_kendall_tau_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged12(
+@register(
     "lineitem_charge_reconcile_ties",
     oracle_sql="""
         WITH paths AS (
@@ -927,7 +913,7 @@ def lineitem_charge_reconcile_ties(
 # ---------------------------------------------------------------------------
 
 
-@staged12(
+@register(
     "ts_ljung_box_q",
     oracle_sql="""
         WITH daily AS (
@@ -1041,7 +1027,7 @@ def ts_ljung_box_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged12(
+@register(
     "ts_hurst_rs_daily",
     oracle_sql="""
         WITH daily AS (
@@ -1115,7 +1101,7 @@ def ts_hurst_rs_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged12(
+@register(
     "ts_variance_ratio_test",
     oracle_sql="""
         WITH daily AS (
@@ -1221,7 +1207,7 @@ def ts_variance_ratio_test(
     )
 
 
-@staged12(
+@register(
     "ts_holt_linear_fold",
     oracle_sql="""
         WITH RECURSIVE daily AS (
@@ -1311,7 +1297,7 @@ def ts_holt_linear_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged12(
+@register(
     "ts_subseries_median_profile",
     oracle_sql="""
         WITH daily AS (
@@ -1393,7 +1379,7 @@ def ts_subseries_median_profile(
 # ---------------------------------------------------------------------------
 
 
-@staged12(
+@register(
     "bidask_microprice_deviation",
     oracle_sql="""
         WITH t AS (
@@ -1492,7 +1478,7 @@ def bidask_microprice_deviation(
     )
 
 
-@staged12(
+@register(
     "bidask_lee_ready_classify",
     oracle_sql="""
         WITH t AS (
@@ -1603,7 +1589,7 @@ def bidask_lee_ready_classify(
     )
 
 
-@staged12(
+@register(
     "bidask_effective_over_quoted",
     oracle_sql="""
         WITH t AS (
@@ -1678,7 +1664,7 @@ def bidask_effective_over_quoted(
     )
 
 
-@staged12(
+@register(
     "bidask_round_size_clustering",
     oracle_sql="""
         SELECT CAST(date_part('hour', ts) AS BIGINT) AS hod,
@@ -1740,7 +1726,7 @@ def bidask_round_size_clustering(
 # ---------------------------------------------------------------------------
 
 
-@staged12(
+@register(
     "text_word_length_profile",
     oracle_sql="""
         WITH tok AS (
@@ -1794,7 +1780,7 @@ def text_word_length_profile(
     ).orderBy("lang", "word_len")
 
 
-@staged12(
+@register(
     "text_token_gini_by_lang",
     oracle_sql="""
         WITH freq AS (
@@ -1873,7 +1859,7 @@ def text_token_gini_by_lang(
     )
 
 
-@staged12(
+@register(
     "text_rake_keyword_lite",
     oracle_sql="""
         WITH tok AS (
@@ -1966,7 +1952,7 @@ def text_rake_keyword_lite(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged12(
+@register(
     "corpus_dedup_survivorship_matrix",
     oracle_sql="""
         WITH keyed AS (
@@ -2036,7 +2022,7 @@ def corpus_dedup_survivorship_matrix(
     )
 
 
-@staged12(
+@register(
     "corpus_heaps_law_checkpoints",
     oracle_sql="""
         WITH first_seen AS (
@@ -2114,7 +2100,7 @@ def corpus_heaps_law_checkpoints(
     )
 
 
-@staged12(
+@register(
     "corpus_length_quantiles_by_source",
     oracle_sql="""
         WITH ranked AS (
@@ -2186,7 +2172,7 @@ def corpus_length_quantiles_by_source(
 # ---------------------------------------------------------------------------
 
 
-@staged12(
+@register(
     "embed_pca_top2_deflation",
     oracle_sql="""
         WITH q AS (
@@ -2345,7 +2331,7 @@ def embed_pca_top2_deflation(
     )
 
 
-@staged12(
+@register(
     "knn_query_batch_topk",
     oracle_sql="""
         WITH q AS (
@@ -2446,7 +2432,7 @@ def knn_query_batch_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged12(
+@register(
     "embed_quant_recall_ab",
     oracle_sql="""
         WITH g AS (
@@ -2578,7 +2564,7 @@ def embed_quant_recall_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged12(
+@register(
     "embed_hubness_bucketed",
     oracle_sql="""
         WITH exp AS (
@@ -2746,7 +2732,7 @@ def embed_hubness_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@staged12(
+@register(
     "graph_triangle_participation",
     oracle_sql="""
         WITH buckets AS (
@@ -2878,7 +2864,7 @@ def copurchase_star_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged12(
+@register(
     "graph_component_size_histogram",
     oracle_sql="""
         WITH RECURSIVE buckets AS (
@@ -2983,7 +2969,7 @@ def graph_component_size_histogram(
     )
 
 
-@staged12(
+@register(
     "graph_scc_transition_bounded",
     oracle_sql="""
         WITH seq AS (
@@ -3078,7 +3064,7 @@ def graph_scc_transition_bounded(
 # ---------------------------------------------------------------------------
 
 
-@staged12(
+@register(
     "dq_referential_census_all_fks",
     oracle_sql="""
         -- count(col) forms (not sum(CASE)): count is 0 over an
@@ -3167,7 +3153,7 @@ def dq_referential_census_all_fks(
     )
 
 
-@staged12(
+@register(
     "dq_schema_drift_typed",
     oracle_sql="""
         WITH day1 AS (
@@ -3282,7 +3268,7 @@ def dq_schema_drift_typed(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("side", "column_name")
 
 
-@staged12(
+@register(
     "gov_t_closeness_audit",
     oracle_sql="""
         WITH banded AS (
@@ -3400,7 +3386,7 @@ def gov_t_closeness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged12(
+@register(
     "etl_scd2_integrity_audit",
     oracle_sql="""
         WITH chg AS (
@@ -3567,7 +3553,7 @@ def etl_scd2_integrity_audit(
     )
 
 
-@staged12(
+@register(
     "etl_late_data_impact",
     oracle_sql="""
         WITH arr AS (
@@ -3638,7 +3624,7 @@ def etl_late_data_impact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged12(
+@register(
     "dq_monotonic_ts_audit",
     oracle_sql="""
         WITH seq AS (
@@ -3711,7 +3697,7 @@ def dq_monotonic_ts_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@staged12(
+@register(
     "stream_chained_windows",
     oracle_sql="""
         WITH m AS (SELECT max(ts) AS mx FROM events),
@@ -3787,7 +3773,7 @@ def stream_chained_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     return emitted.orderBy("bucket_us", "event_type")
 
 
-@staged12(
+@register(
     "stream_union_two_sources",
     oracle_sql="""
         WITH m AS (
@@ -3867,7 +3853,7 @@ def stream_union_two_sources(
 # ---------------------------------------------------------------------------
 
 
-@staged12(
+@register(
     "multimodal_mime_sniff_census",
     oracle_sql="""
         WITH media AS (
@@ -3943,7 +3929,7 @@ def multimodal_mime_sniff_census(
     )
 
 
-@staged12(
+@register(
     "sample_block_bootstrap_days",
     oracle_sql="""
         WITH daily AS (
@@ -4040,7 +4026,7 @@ def _scratch_dir(tag: str, sf_dir: str) -> str:
     return scratch_dir(tag)
 
 
-@staged12(
+@register(
     "source_binaryfile_manifest",
     oracle_sql=None,  # file mtimes/paths are environment — rows-only.
     description="binaryFile source manifest: a lang-partitioned shard "
@@ -4097,7 +4083,7 @@ def source_binaryfile_manifest(
     )
 
 
-@staged12(
+@register(
     "sink_json_lines_partitioned",
     oracle_sql="""
         SELECT lang,
@@ -4150,7 +4136,7 @@ def sink_json_lines_partitioned(
     )
 
 
-@staged12(
+@register(
     "source_text_lines_census",
     oracle_sql="""
         SELECT CAST(count(*) AS BIGINT) AS n_lines,
@@ -4188,7 +4174,7 @@ def source_text_lines_census(
     )
 
 
-@staged12(
+@register(
     "scan_decimal_parquet_roundtrip",
     oracle_sql="""
         SELECT o_orderstatus,
@@ -4238,7 +4224,7 @@ def scan_decimal_parquet_roundtrip(
     )
 
 
-@staged12(
+@register(
     "scan_partition_file_census",
     oracle_sql="""
         SELECT CAST(year(o_orderdate) AS BIGINT) AS order_year,

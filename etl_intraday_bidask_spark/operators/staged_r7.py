@@ -1,12 +1,4 @@
-"""STAGED round-7 operators (wave C) — implemented and parity-tested,
-NOT registered, and NOT part of the round-6 activation wave.
-
-Same staging contract as ``staged_r6.py``/``staged_r6b.py``, one wave
-further out: round 6 activates the 50-key wave B window; this module
-accumulates the NEXT window so round 7 can also activate a fully
-pre-verified batch. Kept in its own ``STAGED_R7`` dict (not merged into
-``STAGED``) so the round-6 activation step cannot accidentally register
-more than its planned 50 keys.
+"""Wave-C operators (SURVEY.md §2.29).
 
 House discipline: scaled-integer exact arithmetic on fixture grids,
 explicit tie-breaks on every window, integer division for graded
@@ -21,21 +13,10 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from etl_intraday_bidask_spark.functions.parity import scaled_long
-from etl_intraday_bidask_spark.registry import QuerySpec, SparkFn
+from etl_intraday_bidask_spark.registry import register
 from etl_intraday_bidask_spark.tables import load
 
-STAGED_R7: dict[str, QuerySpec] = {}
-
-
-def staged7(name: str, oracle_sql: str | None, description: str = ""):
-    def deco(fn: SparkFn) -> SparkFn:
-        STAGED_R7[name] = QuerySpec(name, fn, oracle_sql, description)
-        return fn
-
-    return deco
-
-
-@staged7(
+@register(
     "sample_largest_remainder_alloc",
     oracle_sql="""
         WITH per_source AS (
@@ -110,7 +91,7 @@ def sample_largest_remainder_alloc(
     ).orderBy("source")
 
 
-@staged7(
+@register(
     "dq_benford_first_digit",
     oracle_sql="""
         WITH digits AS (
@@ -176,7 +157,7 @@ def dq_benford_first_digit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged7(
+@register(
     "join_exists_flag_mark",
     oracle_sql="""
         WITH returned AS (
@@ -235,7 +216,7 @@ def join_exists_flag_mark(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged7(
+@register(
     "win_bollinger_bands",
     oracle_sql="""
         WITH hourly AS (
@@ -320,7 +301,7 @@ def win_bollinger_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("bucket_us")
 
 
-@staged7(
+@register(
     "win_drawdown_duration",
     oracle_sql="""
         WITH daily AS (
@@ -395,7 +376,7 @@ def win_drawdown_duration(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("day_us")
 
 
-@staged7(
+@register(
     "agg_corr_matrix_pairwise",
     oracle_sql="""
         WITH v AS (
@@ -511,7 +492,7 @@ def agg_corr_matrix_pairwise(
     )
 
 
-@staged7(
+@register(
     "bidask_kyle_lambda_daily",
     oracle_sql="""
         WITH px AS (
@@ -609,7 +590,7 @@ def bidask_kyle_lambda_daily(
     )
 
 
-@staged7(
+@register(
     "graph_kcore_peel",
     oracle_sql="""
         WITH buckets AS (
@@ -723,7 +704,7 @@ def graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     return r0.unionByName(r1).unionByName(r2).orderBy("peel")
 
 
-@staged7(
+@register(
     "embed_hubness_reverse_knn",
     oracle_sql="""
         WITH exp AS (
@@ -824,7 +805,7 @@ def embed_hubness_reverse_knn(
     )
 
 
-@staged7(
+@register(
     "text_readability_score",
     oracle_sql="""
         WITH per_doc AS (
@@ -897,7 +878,7 @@ def text_readability_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged7(
+@register(
     "etl_compaction_plan",
     oracle_sql="""
         WITH files AS (
@@ -976,7 +957,7 @@ def etl_compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged7(
+@register(
     "sql_window_clause_shared",
     oracle_sql="""
         WITH ranked AS (
@@ -1045,7 +1026,7 @@ def sql_window_clause_shared(
     )
 
 
-@staged7(
+@register(
     "dq_duplicate_payment_detect",
     oracle_sql="""
         WITH o AS (
@@ -1116,7 +1097,7 @@ def dq_duplicate_payment_detect(
     ).orderBy("o_custkey", "key_a", "key_b")
 
 
-@staged7(
+@register(
     "cep_top_paths",
     oracle_sql="""
         WITH seq AS (
@@ -1187,7 +1168,7 @@ def cep_top_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged7(
+@register(
     "orders_sla_breach_by_priority",
     oracle_sql="""
         WITH latency AS (
@@ -1271,7 +1252,7 @@ def orders_sla_breach_by_priority(
     )
 
 
-@staged7(
+@register(
     "bidask_bar_resample_check",
     oracle_sql="""
         WITH raw AS (
@@ -1403,7 +1384,7 @@ def bidask_bar_resample_check(
     )
 
 
-@staged7(
+@register(
     "parts_abc_xyz_matrix",
     oracle_sql="""
         WITH part_month AS (
@@ -1516,7 +1497,7 @@ def parts_abc_xyz_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged7(
+@register(
     "graph_link_prediction_jaccard",
     oracle_sql="""
         WITH buckets AS (
@@ -1620,7 +1601,7 @@ def graph_link_prediction_jaccard(
     )
 
 
-@staged7(
+@register(
     "sample_purged_time_folds",
     oracle_sql="""
         WITH days AS (
@@ -1705,7 +1686,7 @@ def sample_purged_time_folds(
     )
 
 
-@staged7(
+@register(
     "stream_topk_per_window",
     oracle_sql="""
         WITH m AS (
@@ -1776,7 +1757,7 @@ def stream_topk_per_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ranked.where(F.col("rk") <= 2).orderBy("bucket_us", "rk")
 
 
-@staged7(
+@register(
     "etl_lineage_provenance_hash",
     oracle_sql="""
         WITH target AS (
@@ -1835,7 +1816,7 @@ def etl_lineage_provenance_hash(
     )
 
 
-@staged7(
+@register(
     "etl_merkle_reconcile",
     oracle_sql="""
         WITH replica AS (
@@ -1927,7 +1908,7 @@ def etl_merkle_reconcile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged7(
+@register(
     "subquery_correlated_scalar",
     oracle_sql="""
         SELECT o_orderkey, o_custkey,
@@ -1988,7 +1969,7 @@ def subquery_correlated_scalar(
     )
 
 
-@staged7(
+@register(
     "pivot_multi_metric",
     oracle_sql="""
         SELECT o_orderpriority,
@@ -2047,7 +2028,7 @@ def pivot_multi_metric(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pv.select(*cols).orderBy("o_orderpriority")
 
 
-@staged7(
+@register(
     "bidask_quote_trade_ratio",
     oracle_sql="""
         WITH h AS (
@@ -2113,7 +2094,7 @@ def bidask_quote_trade_ratio(
     ).orderBy("bucket_us")
 
 
-@staged7(
+@register(
     "embed_drift_split_halves",
     oracle_sql="""
         WITH exp AS (
@@ -2206,7 +2187,7 @@ def embed_drift_split_halves(
     )
 
 
-@staged7(
+@register(
     "ts_seasonal_naive_residuals",
     oracle_sql="""
         WITH hourly AS (
@@ -2265,7 +2246,7 @@ def ts_seasonal_naive_residuals(
     )
 
 
-@staged7(
+@register(
     "orders_seasonal_index_monthly",
     oracle_sql="""
         WITH monthly AS (
@@ -2349,7 +2330,7 @@ def orders_seasonal_index_monthly(
     )
 
 
-@staged7(
+@register(
     "dedup_incremental_batch",
     oracle_sql="""
         WITH existing AS (
@@ -2418,7 +2399,7 @@ def dedup_incremental_batch(
     )
 
 
-@staged7(
+@register(
     "text_boilerplate_prefix_detect",
     oracle_sql="""
         WITH prefixes AS (
@@ -2485,7 +2466,7 @@ def text_boilerplate_prefix_detect(
     )
 
 
-@staged7(
+@register(
     "events_lifecycle_stages",
     oracle_sql="""
         WITH weeks AS (
@@ -2583,7 +2564,7 @@ def events_lifecycle_stages(
     )
 
 
-@staged7(
+@register(
     "orders_aging_buckets",
     oracle_sql="""
         WITH cutoff AS (
@@ -2646,7 +2627,7 @@ def orders_aging_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged7(
+@register(
     "dq_categorical_entropy",
     oracle_sql="""
         WITH counts AS (
@@ -2712,7 +2693,7 @@ def dq_categorical_entropy(
     )
 
 
-@staged7(
+@register(
     "embed_norm_histogram",
     oracle_sql="""
         WITH comp AS (
@@ -2780,7 +2761,7 @@ def embed_norm_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged7(
+@register(
     "graph_degree_distribution",
     oracle_sql="""
         WITH buckets AS (
@@ -2854,7 +2835,7 @@ def graph_degree_distribution(
     ).orderBy("degree")
 
 
-@staged7(
+@register(
     "bidask_market_beta_per_user",
     oracle_sql="""
         WITH hourly AS (
@@ -2955,7 +2936,7 @@ def bidask_market_beta_per_user(
     )
 
 
-@staged7(
+@register(
     "orders_fill_rate",
     oracle_sql="""
         WITH per_order AS (
@@ -3011,7 +2992,7 @@ def orders_fill_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged7(
+@register(
     "events_power_user_curve",
     oracle_sql="""
         WITH per_user AS (
@@ -3071,7 +3052,7 @@ def events_power_user_curve(
     )
 
 
-@staged7(
+@register(
     "merge_upsert_scd3",
     oracle_sql="""
         WITH updates AS (
@@ -3150,7 +3131,7 @@ def merge_upsert_scd3(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged7(
+@register(
     "dq_key_gap_detect",
     oracle_sql="""
         WITH keys AS (
@@ -3202,7 +3183,7 @@ def dq_key_gap_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged7(
+@register(
     "graph_clustering_coefficient",
     oracle_sql="""
         WITH buckets AS (
@@ -3294,7 +3275,7 @@ def graph_clustering_coefficient(
     )
 
 
-@staged7(
+@register(
     "dq_split_leakage_check",
     oracle_sql="""
         WITH keyed AS (
@@ -3412,6 +3393,20 @@ def _lsh_sweep_oracle() -> str:
     """
 
 
+@register(
+    "dedup_lsh_band_sweep",
+    oracle_sql=_lsh_sweep_oracle(),
+    description="LSH operating-curve sweep: the SAME 16 minhash values banded "
+    "three ways (2 bands x 8 rows / 4x4 / 8x2) in one pass, emitting "
+    "candidate-pair counts per configuration — the tuning table that picks "
+    "the band shape for a target similarity threshold (more bands with "
+    "shorter signatures fire earlier on lower Jaccard: candidate counts must "
+    "be monotone 2x8 <= 4x4 <= 8x2, and the grade pins all three points of "
+    "the curve). Signature construction reuses dedup_minhash_lsh's exact "
+    "integer universal hashes; the band join is string-equality on aggregated "
+    "signatures. Scale: the sweep multiplies the BAND table (doc x config "
+    "grain), never the token postings — the minhash pass itself is shared.",
+)
 def _lsh_band_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_intraday_bidask_spark.operators.dedup_advanced import (
         MINHASH_P,
@@ -3484,26 +3479,7 @@ def _lsh_band_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-STAGED_R7["dedup_lsh_band_sweep"] = QuerySpec(
-    "dedup_lsh_band_sweep",
-    _lsh_band_sweep,
-    _lsh_sweep_oracle(),
-    "LSH operating-curve sweep: the SAME 16 minhash values banded "
-    "three ways (2 bands x 8 rows / 4x4 / 8x2) in one pass, emitting "
-    "candidate-pair counts per configuration — the tuning table that "
-    "picks the band shape for a target similarity threshold (more "
-    "bands with shorter signatures fire earlier on lower Jaccard: "
-    "candidate counts must be monotone 2x8 <= 4x4 <= 8x2, and the "
-    "grade pins all three points of the curve). Signature "
-    "construction reuses dedup_minhash_lsh's exact integer universal "
-    "hashes; the band join is string-equality on aggregated "
-    "signatures. Scale: the sweep multiplies the BAND table (doc x "
-    "config grain), never the token postings — the minhash pass "
-    "itself is shared.",
-)
-
-
-@staged7(
+@register(
     "dq_orphan_rate_monthly",
     oracle_sql="""
         WITH loaded_orders AS (
@@ -3571,7 +3547,7 @@ def dq_orphan_rate_monthly(
     )
 
 
-@staged7(
+@register(
     "orders_mix_shift_yoy",
     oracle_sql="""
         WITH banded AS (
@@ -3657,7 +3633,7 @@ def orders_mix_shift_yoy(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("price_band")
 
 
-@staged7(
+@register(
     "events_cumulative_uniques",
     oracle_sql="""
         WITH firsts AS (
@@ -3708,7 +3684,7 @@ def events_cumulative_uniques(
     ).orderBy("day_us")
 
 
-@staged7(
+@register(
     "text_unicode_profile",
     oracle_sql="""
         SELECT lang,
@@ -3764,7 +3740,7 @@ def text_unicode_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged7(
+@register(
     "events_hazard_curve",
     oracle_sql="""
         WITH gaps AS (
@@ -3842,7 +3818,7 @@ def events_hazard_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@staged7(
+@register(
     "etl_retention_prune_plan",
     oracle_sql="""
         WITH ranked AS (
@@ -3904,7 +3880,7 @@ def etl_retention_prune_plan(
     )
 
 
-@staged7(
+@register(
     "dq_bot_regularity_detect",
     oracle_sql="""
         WITH gaps AS (

@@ -8,9 +8,12 @@ Every declared operator registers a :class:`QuerySpec` holding
   driver grades rows-only);
 - ``description`` — what the operator computes and why it is in-surface.
 
-``__spark_entry__.py`` exposes this registry to the grading driver, and
-``tests/test_parity.py`` parametrizes over it, so implementing an
-operator in one place wires the harness, the tests, and the bench.
+:func:`register` is the only way in: every operator module decorates
+its ``spark_fn`` with it, and importing ``operators`` (module import
+order is registry order) populates the registry. ``__spark_entry__.py``
+exposes it to grading and ``tests/test_parity.py`` parametrizes over
+it, so implementing an operator in one place wires the harness, the
+tests, and the bench.
 
 Hash-parity discipline (SURVEY.md §1.3, binding for every spec):
 - every floating aggregate is ``round(expr, 4)`` identically on both
@@ -54,17 +57,6 @@ def register(
         return fn
 
     return deco
-
-
-def activate_staged(staged: dict[str, QuerySpec]) -> None:
-    """Promote a staged wave (a dict of pre-verified QuerySpecs built by a
-    ``staged_r*`` module) into the global registry. Same duplicate check
-    as :func:`register`; called from ``operators/__init__`` when a wave's
-    grading round arrives."""
-    for name, spec in staged.items():
-        if name in REGISTRY:
-            raise ValueError(f"duplicate operator registration: {name}")
-        REGISTRY[name] = spec
 
 
 def load_all_operators() -> dict[str, QuerySpec]:

@@ -43,6 +43,14 @@ def duck_small():
 
 
 @pytest.fixture(scope="session")
+def parity_verdicts() -> dict:
+    """Registry key -> outcome of its first parity check this session;
+    tests that check the same key again replay it
+    (tests/test_parity.py:check_parity)."""
+    return {}
+
+
+@pytest.fixture(scope="session")
 def duck_medium():
     con = make_duckdb(SF_MEDIUM)
     yield con

@@ -8,8 +8,6 @@ from __future__ import annotations
 import json
 import os
 
-import pytest
-
 import __spark_entry__ as entry
 from etl_intraday_bidask_spark.registry import load_all_operators
 
@@ -24,22 +22,6 @@ def test_queries_covers_registry_exactly():
     assert set(oracles) == {
         n for n, s in registry.items() if s.oracle_sql is not None
     }
-
-
-def test_round2_window_targets_ungraded_ops():
-    """While only round 1 grades exist, the first 50 keys must be exactly
-    the round-1-ungraded operators plus the repaired dedup_simhash."""
-    r02 = os.path.join(REPO, "CORRECTNESS_r02.json")
-    if os.path.exists(r02):
-        return  # hand-built window only applies before round-2 grades land
-    with open(os.path.join(REPO, "CORRECTNESS_r01.json")) as f:
-        graded_r1 = set(json.load(f))
-    window = list(entry.queries())[:50]
-    assert len(set(window)) == 50
-    regraded = [k for k in window if k in graded_r1]
-    assert regraded == ["dedup_simhash"], (
-        "only the round-1 hash-fail should burn a window slot on re-grading"
-    )
 
 
 def test_rotation_prefers_least_recently_graded():
@@ -89,6 +71,17 @@ def test_latest_failures_reads_most_recent_grade():
         ), f"{k} flagged failed but latest grade is green"
 
 
+def test_rotation_ties_break_on_name():
+    """Keys with the same failure flag and grading history sort by name
+    alone, whatever order the registry hands them in."""
+    keys = ["zeta", "beta", "alpha", "mid"]
+    history = {"zeta": [3], "beta": [3], "alpha": [3, 4], "mid": [3]}
+    assert entry.rotation_order(keys, history) == [
+        "beta", "mid", "zeta", "alpha"
+    ]
+    assert entry.rotation_order(["y", "x"], {}, failed={"x", "y"}) == ["x", "y"]
+
+
 def test_rotation_is_deterministic_and_total():
     registry = load_all_operators()
     history = entry._grading_history()
@@ -99,13 +92,14 @@ def test_rotation_is_deterministic_and_total():
 
 
 def test_round3_window_would_cover_never_graded_ops():
-    """Simulated round-3 state: r01 graded its 50, r02 will grade the
-    hand-built window; every operator added since (never graded) must
-    lead the rotated order, followed by the least-recently-graded."""
+    """Simulated round-3 state: only the committed r01 and r02 grades
+    exist; every operator added since (never graded) must lead the
+    rotated order, followed by the least-recently-graded."""
     registry = load_all_operators()
     with open(os.path.join(REPO, "CORRECTNESS_r01.json")) as f:
         r01 = list(json.load(f))
-    r02 = entry._GRADING_PRIORITY[:50]
+    with open(os.path.join(REPO, "CORRECTNESS_r02.json")) as f:
+        r02 = list(json.load(f))
     history: dict[str, list[int]] = {}
     for k in r01:
         history.setdefault(k, []).append(1)
@@ -330,28 +324,6 @@ def test_window_invariant_failed_then_never_then_stalest():
     assert staleness == sorted(staleness), (
         "graded keys not in least-recently-graded order"
     )
-
-
-def test_next_window_matches_pending_wave():
-    """With the latest activated wave not yet driver-graded, its keys
-    are exactly the never-graded set and therefore fill the next 50-slot
-    window. Conditioned on on-disk state (skips once the driver has
-    graded the wave) so it cannot go stale like its round-5
-    predecessor."""
-    registry = load_all_operators()
-    history = entry._grading_history()
-    never = {k for k in registry if k not in history}
-    wave = set(entry._DEFER_NEW_R11)
-    if not never & wave:
-        pytest.skip("latest wave already driver-graded")
-    assert never == wave, (
-        "never-graded keys and the activated wave diverge: "
-        f"extra={sorted(never - wave)} missing={sorted(wave - never)}"
-    )
-    order = entry.rotation_order(
-        list(registry), history, entry._latest_failures()
-    )
-    assert set(order[:50]) == wave
 
 
 def test_rotation_cannot_starve_any_key():

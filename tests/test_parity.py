@@ -1,7 +1,12 @@
 """Oracle-parity tests: for every registered operator with an oracle,
 run the PySpark plan and the DuckDB SQL on the same parquet fixtures and
-assert value equality — the same check as the driver's t2 gate, at
-sf0.001 for speed (SURVEY.md §5)."""
+assert column, dtype-kind, row-count and value equality — the same check
+as the t2 grading gate, at sf0.001 for speed (SURVEY.md §5). Rows-only
+operators must return at least one row.
+
+:func:`check_parity` is the one parity check. The per-module test IDs in
+``tests/test_staged_r*.py`` call it too and replay its session verdict.
+"""
 
 from __future__ import annotations
 
@@ -12,15 +17,26 @@ import pytest
 from etl_intraday_bidask_spark.registry import load_all_operators
 from tests.conftest import SF_SMALL
 
-# Battery tier (VERDICT r14 item 6): full-registry oracle parity is the
-# builder's cadence layer; the driver's own t2 oracle gate re-checks a
-# 50-key sample every round, so the default tier can skip this suite
-# and still leave the grading driver with an independent parity signal.
-pytestmark = pytest.mark.battery
-
 REGISTRY = load_all_operators()
-HASH_CHECKED = sorted(n for n, s in REGISTRY.items() if s.oracle_sql)
+
+# ~320 s at sf0.001 on 4 cores, over 40% of this file's wall: battery tier
+# only (pytest.ini), everything else runs in the default tier.
+_BATTERY_ONLY = {"embed_pca_top2_deflation"}
+
+HASH_CHECKED = [
+    pytest.param(n, marks=pytest.mark.battery) if n in _BATTERY_ONLY else n
+    for n in sorted(n for n, s in REGISTRY.items() if s.oracle_sql)
+]
 ROWS_ONLY = sorted(n for n, s in REGISTRY.items() if not s.oracle_sql)
+
+
+def module_ops(*modules: str) -> list[str]:
+    """Sorted registry keys whose ``spark_fn`` is defined in one of the
+    named ``etl_intraday_bidask_spark.operators`` modules."""
+    wanted = {f"etl_intraday_bidask_spark.operators.{m}" for m in modules}
+    return sorted(
+        n for n, s in REGISTRY.items() if s.spark_fn.__module__ in wanted
+    )
 
 
 def normalize(rows: list[tuple], colnames: list[str]) -> list[tuple]:
@@ -56,11 +72,13 @@ def run_spark(spark, name: str, sf_dir: str):
     return df.collect(), df.columns, dict(df.dtypes)
 
 
+def duck_types(rel) -> dict[str, str]:
+    return {c: str(t).upper() for c, t in zip(rel.columns, rel.types)}
+
+
 def run_duck(con, name: str):
     rel = con.sql(REGISTRY[name].oracle_sql)
-    cols = list(rel.columns)
-    types = {c: str(t).upper() for c, t in zip(rel.columns, rel.types)}
-    return rel.fetchall(), cols, types
+    return rel.fetchall(), list(rel.columns), duck_types(rel)
 
 
 # Type *kind* each engine's result column materializes as once it reaches
@@ -114,10 +132,13 @@ def assert_dtype_parity(name: str, s_types: dict, d_types: dict) -> None:
         )
 
 
-@pytest.mark.parametrize("name", HASH_CHECKED)
-def test_hash_parity(spark, duck_small, name):
+def _check(spark, duck, name: str) -> None:
     s_rows, s_cols, s_types = run_spark(spark, name, SF_SMALL)
-    d_rows, d_cols, d_types = run_duck(duck_small, name)
+    if not REGISTRY[name].oracle_sql:
+        assert s_cols, f"{name}: no columns"
+        assert len(s_rows) >= 1, f"{name}: rows-only op returned no rows"
+        return
+    d_rows, d_cols, d_types = run_duck(duck, name)
     assert sorted(s_cols) == sorted(d_cols), (
         f"{name}: column names differ: spark={s_cols} duckdb={d_cols}"
     )
@@ -135,11 +156,41 @@ def test_hash_parity(spark, duck_small, name):
     )
 
 
+def check_parity(spark, duck, verdicts: dict, name: str) -> None:
+    """Parity of registry key ``name`` at sf0.001: hash parity against its
+    oracle, or at least one row for a rows-only op. ``verdicts`` (the
+    session's ``parity_verdicts`` fixture) keeps the first run's outcome;
+    a repeat call re-raises or passes on that outcome."""
+    if name not in verdicts:
+        try:
+            _check(spark, duck, name)
+        except Exception as exc:
+            verdicts[name] = exc
+        else:
+            verdicts[name] = None
+    if verdicts[name] is not None:
+        raise verdicts[name]
+
+
+def check_dtypes(spark, duck, name: str) -> None:
+    """Dtype-kind parity of oracled key ``name`` from plan analysis alone
+    (nothing executes)."""
+    s_types = dict(REGISTRY[name].spark_fn(spark, SF_SMALL).dtypes)
+    d_types = duck_types(duck.sql(REGISTRY[name].oracle_sql))
+    assert sorted(s_types) == sorted(d_types), (
+        f"{name}: column names differ: {sorted(s_types)} vs {sorted(d_types)}"
+    )
+    assert_dtype_parity(name, s_types, d_types)
+
+
+@pytest.mark.parametrize("name", HASH_CHECKED)
+def test_hash_parity(spark, duck_small, parity_verdicts, name):
+    check_parity(spark, duck_small, parity_verdicts, name)
+
+
 @pytest.mark.parametrize("name", ROWS_ONLY)
-def test_rows_only_runs(spark, name):
-    rows, cols, _ = run_spark(spark, name, SF_SMALL)
-    assert cols, f"{name}: no columns"
-    assert len(rows) >= 0
+def test_rows_only_runs(spark, duck_small, parity_verdicts, name):
+    check_parity(spark, duck_small, parity_verdicts, name)
 
 
 def test_hll_partial_merge_accuracy(spark, duck_small):

@@ -168,28 +168,7 @@ def test_stream_sliding_append_oracle_parity_10x(spark, duck_big, big_dir):
     assert n > 0
 
 
-# --- staged wave-B stress (driven off STAGED; unregistered until r6) ---
-
-from etl_intraday_bidask_spark.operators.staged_r6 import STAGED
-
-
-def wave_b_parity_10x(spark, duck_big, big_dir, name):
-    # Renamed (round-7 fix): a later spec-taking staged_parity_10x for
-    # waves D-G shadowed this string-keyed wave-B form, breaking the
-    # three call sites below with 'str has no spark_fn'.
-    spec = STAGED[name]
-    df = spec.spark_fn(spark, big_dir)
-    s_rows, s_cols = df.collect(), df.columns
-    rel = duck_big.sql(spec.oracle_sql)
-    d_rows, d_cols = rel.fetchall(), list(rel.columns)
-    assert sorted(s_cols) == sorted(d_cols)
-    assert len(s_rows) == len(d_rows), (
-        f"{name}@10x: spark={len(s_rows)} duckdb={len(d_rows)}"
-    )
-    assert normalize(s_rows, s_cols) == normalize(d_rows, d_cols), (
-        f"{name}@10x: value mismatch"
-    )
-    return len(s_rows)
+# --- wave-B stress ---
 
 
 def test_active_users_oracle_parity_10x(spark, duck_big, big_dir):
@@ -197,7 +176,7 @@ def test_active_users_oracle_parity_10x(spark, duck_big, big_dir):
     the distinct (day,user) grain grows 5x and every rolling count must
     still match the range-join oracle exactly — proves the bounded
     explode is lossless, not just fast."""
-    n = wave_b_parity_10x(spark, duck_big, big_dir, "events_active_users_rolling")
+    n = oracle_parity_10x(spark, duck_big, big_dir, "events_active_users_rolling")
     assert n > 0
 
 
@@ -205,7 +184,7 @@ def test_cms_heavy_hitters_oracle_parity_10x(spark, duck_big, big_dir):
     """Count-Min at 10x traffic and 5x users: heavier cells, more
     collisions — estimates and overcounts must stay hash-identical to
     DuckDB's recomputation of the same sketch."""
-    n = wave_b_parity_10x(spark, duck_big, big_dir, "agg_heavy_hitters_cms")
+    n = oracle_parity_10x(spark, duck_big, big_dir, "agg_heavy_hitters_cms")
     assert n == 10
 
 
@@ -213,36 +192,18 @@ def test_transition_matrix_oracle_parity_10x(spark, duck_big, big_dir):
     """Markov transitions over 1M events with 37 µs-staggered replica
     timestamps: per-user sequences interleave replicas tightly, so any
     tie-break divergence in the lag ordering shows up as a count shift."""
-    n = wave_b_parity_10x(spark, duck_big, big_dir, "cep_transition_matrix")
+    n = oracle_parity_10x(spark, duck_big, big_dir, "cep_transition_matrix")
     assert n > 0
 
 
-# --- staged wave-C stress (STAGED_R7; unregistered until r7) ---
-
-from etl_intraday_bidask_spark.operators.staged_r7 import STAGED_R7
-
-
-def staged7_parity_10x(spark, duck_big, big_dir, name):
-    spec = STAGED_R7[name]
-    df = spec.spark_fn(spark, big_dir)
-    s_rows, s_cols = df.collect(), df.columns
-    rel = duck_big.sql(spec.oracle_sql)
-    d_rows, d_cols = rel.fetchall(), list(rel.columns)
-    assert sorted(s_cols) == sorted(d_cols)
-    assert len(s_rows) == len(d_rows), (
-        f"{name}@10x: spark={len(s_rows)} duckdb={len(d_rows)}"
-    )
-    assert normalize(s_rows, s_cols) == normalize(d_rows, d_cols), (
-        f"{name}@10x: value mismatch"
-    )
-    return len(s_rows)
+# --- wave-C stress ---
 
 
 def test_market_beta_oracle_parity_10x(spark, duck_big, big_dir):
     """Per-user exact OLS at 1M events / 5x key cardinality: the
     128-bit cross moments and leave-one-out market join must stay
     exact when hourly market cents grow 10x."""
-    n = staged7_parity_10x(
+    n = oracle_parity_10x(
         spark, duck_big, big_dir, "bidask_market_beta_per_user"
     )
     assert n > 0
@@ -252,7 +213,7 @@ def test_hazard_curve_oracle_parity_10x(spark, duck_big, big_dir):
     """Survival hazard over 1M events: denser per-user sequences shift
     mass into the low buckets; reverse-cumulative at-risk counts and
     integer hazards must match exactly."""
-    n = staged7_parity_10x(spark, duck_big, big_dir, "events_hazard_curve")
+    n = oracle_parity_10x(spark, duck_big, big_dir, "events_hazard_curve")
     assert n > 0
 
 
@@ -265,31 +226,13 @@ def test_incremental_dedup_oracle_parity_10x(spark, duck_big, big_dir):
     on BOTH engines and blows the wall-clock budget; its scale
     behavior is already proven at sf0.1 and its machinery is shared
     with dedup_minhash_lsh.)"""
-    n = staged7_parity_10x(
+    n = oracle_parity_10x(
         spark, duck_big, big_dir, "dedup_incremental_batch"
     )
     assert n > 0
 
 
 # ---- wave D/E stress parity at ~sf1 (round 6) ----------------------
-# The staged waves are unregistered, so drive their specs directly
-# with the same oracle_parity machinery.
-
-from etl_intraday_bidask_spark.operators.staged_r8 import STAGED_R8
-from etl_intraday_bidask_spark.operators.staged_r9 import STAGED_R9
-from etl_intraday_bidask_spark.operators.staged_r10 import STAGED_R10
-from etl_intraday_bidask_spark.operators.staged_r11 import STAGED_R11
-
-
-def staged_parity_10x(spark, duck_big, big_dir, spec):
-    df = spec.spark_fn(spark, big_dir)
-    s_rows, s_cols = df.collect(), df.columns
-    rel = duck_big.sql(spec.oracle_sql)
-    d_rows, d_cols = rel.fetchall(), list(rel.columns)
-    assert sorted(s_cols) == sorted(d_cols)
-    assert len(s_rows) == len(d_rows)
-    assert normalize(s_rows, s_cols) == normalize(d_rows, d_cols)
-    return len(s_rows)
 
 
 def test_auc_grid_reduction_10x(spark, duck_big, big_dir):
@@ -297,41 +240,27 @@ def test_auc_grid_reduction_10x(spark, duck_big, big_dir):
     stays bounded (duplicated replicas share values), so the window
     input doesn't grow 10x — exactly the scale claim — and the exact
     integers still hash-match."""
-    staged_parity_10x(
-        spark, duck_big, big_dir, STAGED_R8["eval_auc_exact"]
-    )
+    oracle_parity_10x(spark, duck_big, big_dir, "eval_auc_exact")
 
 
 def test_markov_value_iteration_10x(spark, duck_big, big_dir):
     """8 rounds of integer value iteration over ~1M transitions: the
     chain matrix stays |states|^2 and the iteration is bit-stable at
     10x the transition mass."""
-    staged_parity_10x(
-        spark,
-        duck_big,
-        big_dir,
-        STAGED_R9["attr_markov_removal_effect"],
-    )
+    oracle_parity_10x(spark, duck_big, big_dir, "attr_markov_removal_effect")
 
 
 def test_vpin_volume_clock_10x(spark, duck_big, big_dir):
     """The volume-clock prefix sum over ~20k trades: bucket boundaries
     and tick signs are exact integers, so the 10x stream hash-matches."""
-    staged_parity_10x(
-        spark,
-        duck_big,
-        big_dir,
-        STAGED_R9["bidask_vpin_volume_buckets"],
-    )
+    oracle_parity_10x(spark, duck_big, big_dir, "bidask_vpin_volume_buckets")
 
 
 def test_changepoint_binseg_10x(spark, duck_big, big_dir):
     """Cross-multiplied between-variance scores on the 10x daily
     series: int64 headroom holds (counts 10x, squares 100x) and the
     argmax is deterministic."""
-    staged_parity_10x(
-        spark, duck_big, big_dir, STAGED_R9["ts_changepoint_binseg"]
-    )
+    oracle_parity_10x(spark, duck_big, big_dir, "ts_changepoint_binseg")
 
 
 def test_pr_auc_exact_10x(spark, duck_big, big_dir):
@@ -340,9 +269,7 @@ def test_pr_auc_exact_10x(spark, duck_big, big_dir):
     score GRID while per-score masses grow 10x, and the ppm-floored
     precision terms stay inside int64 (tp_cum*1e6 ~ 1e13) — the two
     failure modes a 100x corpus would hit first."""
-    staged_parity_10x(
-        spark, duck_big, big_dir, STAGED_R8["eval_pr_auc_exact"]
-    )
+    oracle_parity_10x(spark, duck_big, big_dir, "eval_pr_auc_exact")
 
 
 def test_ks_statistic_10x(spark, duck_big, big_dir):
@@ -351,9 +278,7 @@ def test_ks_statistic_10x(spark, duck_big, big_dir):
     running CDFs and the argmax gap must re-derive exactly — ties on
     the shared grid are resolved by the same integral cross-
     multiplication on both engines."""
-    staged_parity_10x(
-        spark, duck_big, big_dir, STAGED_R8["eval_ks_statistic"]
-    )
+    oracle_parity_10x(spark, duck_big, big_dir, "eval_ks_statistic")
 
 
 def test_psi_score_drift_10x(spark, duck_big, big_dir):
@@ -361,9 +286,7 @@ def test_psi_score_drift_10x(spark, duck_big, big_dir):
     from a rank over the bounded grid, and both engines must land
     every 10x-heavier score group in the same bin before the
     log-ratio terms quantize."""
-    staged_parity_10x(
-        spark, duck_big, big_dir, STAGED_R8["eval_psi_score_drift"]
-    )
+    oracle_parity_10x(spark, duck_big, big_dir, "eval_psi_score_drift")
 
 
 def test_lift_gain_deciles_10x(spark, duck_big, big_dir):
@@ -371,18 +294,14 @@ def test_lift_gain_deciles_10x(spark, duck_big, big_dir):
     assignment is the tie-prone step (equal scores straddling a
     boundary), and the replica blocks create exactly those cross-
     partition ties."""
-    staged_parity_10x(
-        spark, duck_big, big_dir, STAGED_R8["eval_lift_gain_deciles"]
-    )
+    oracle_parity_10x(spark, duck_big, big_dir, "eval_lift_gain_deciles")
 
 
 def test_garman_klass_vol_10x(spark, duck_big, big_dir):
     """Garman-Klass volatility at 10x events: the per-bar OHLC terms
     square log ranges, so 10x-denser bars move every ln2/ln-chain
     input — the estimator must re-derive exactly on both engines."""
-    staged_parity_10x(
-        spark, duck_big, big_dir, STAGED_R9["bidask_garman_klass_vol"]
-    )
+    oracle_parity_10x(spark, duck_big, big_dir, "bidask_garman_klass_vol")
 
 
 def test_kaplan_meier_10x(spark, duck_big, big_dir):
@@ -390,9 +309,7 @@ def test_kaplan_meier_10x(spark, duck_big, big_dir):
     round-7 zero-factor fix (a risk set emptied by censoring must
     contribute a factor of exactly 1, not NULL-poison the product)
     with 10x the at-risk mass behind every factor."""
-    staged_parity_10x(
-        spark, duck_big, big_dir, STAGED_R10["events_kaplan_meier_weekly"]
-    )
+    oracle_parity_10x(spark, duck_big, big_dir, "events_kaplan_meier_weekly")
 
 
 def test_rich_club_10x(spark, duck_big, big_dir):
@@ -400,18 +317,14 @@ def test_rich_club_10x(spark, duck_big, big_dir):
     denominator fix (top-degree set size derived from the data, not
     hardcoded) — the 10x user graph changes both the club membership
     and its size, so a stale constant cannot survive this check."""
-    staged_parity_10x(
-        spark, duck_big, big_dir, STAGED_R11["graph_rich_club_topdeg"]
-    )
+    oracle_parity_10x(spark, duck_big, big_dir, "graph_rich_club_topdeg")
 
 
 def test_anchored_vwap_10x(spark, duck_big, big_dir):
     """Anchored VWAP at 10x trades: the month-anchored cumulative
     price*volume and volume sums grow 10x — int64 prefix-sum headroom
     and identical anchor boundaries on both engines."""
-    staged_parity_10x(
-        spark, duck_big, big_dir, STAGED_R11["bidask_anchored_vwap_monthly"]
-    )
+    oracle_parity_10x(spark, duck_big, big_dir, "bidask_anchored_vwap_monthly")
 
 
 def test_aqe_skew_join_splits_hot_partition(spark, tmp_path):
@@ -541,52 +454,40 @@ def test_spill_identical_results_under_memory_pressure():
 
 # ---- wave H stress parity at ~sf1 (round 8) -------------------------
 
-from etl_intraday_bidask_spark.operators.staged_r12 import STAGED_R12
-
 
 def test_hurst_rs_integer_headroom_10x(spark, duck_big, big_dir):
     """The n-scaled cumulative deviations at 10x: z-magnitudes grow
     ~100x (n and per-day counts both 10x) — int64 headroom must hold
     and the one float division still hash-matches."""
-    staged_parity_10x(
-        spark, duck_big, big_dir, STAGED_R12["ts_hurst_rs_daily"]
-    )
+    oracle_parity_10x(spark, duck_big, big_dir, "ts_hurst_rs_daily")
 
 
 def test_variance_ratio_128bit_10x(spark, duck_big, big_dir):
     """The 128-bit difference-square accumulation at 10x volume: the
     scaled variances pass through DECIMAL(38,0)/HUGEINT and the div-1e6
     descaled grades stay exact."""
-    staged_parity_10x(
-        spark, duck_big, big_dir, STAGED_R12["ts_variance_ratio_test"]
-    )
+    oracle_parity_10x(spark, duck_big, big_dir, "ts_variance_ratio_test")
 
 
 def test_t_closeness_emd_10x(spark, duck_big, big_dir):
     """Cross-multiplied cumulative EMD at 10x orders: cum*N products
     reach ~1e12 x 1e4 bp scaling — exact-int headroom and the densified
     seg x band grid both survive."""
-    staged_parity_10x(
-        spark, duck_big, big_dir, STAGED_R12["gov_t_closeness_audit"]
-    )
+    oracle_parity_10x(spark, duck_big, big_dir, "gov_t_closeness_audit")
 
 
 def test_mode_sliding_fold_10x(spark, duck_big, big_dir):
     """The run-length mode fold over ~1M 5-row frames: per-row constant
     work, and the lexicographic tie-break stays deterministic across
     the 10x layout."""
-    staged_parity_10x(
-        spark, duck_big, big_dir, STAGED_R12["win_mode_sliding"]
-    )
+    oracle_parity_10x(spark, duck_big, big_dir, "win_mode_sliding")
 
 
 def test_rake_phrase_islands_10x(spark, duck_big, big_dir):
     """Gaps-and-islands phrase extraction over the 10x corpus: island
     ids stay doc-local and the top-10 tie-break (count desc, phrase)
     is total, so the ranking hash-matches."""
-    staged_parity_10x(
-        spark, duck_big, big_dir, STAGED_R12["text_rake_keyword_lite"]
-    )
+    oracle_parity_10x(spark, duck_big, big_dir, "text_rake_keyword_lite")
 
 
 @pytest.mark.slow

@@ -1,18 +1,19 @@
-"""Cross-assertions between INDEPENDENT staged operators: identities
-that must hold between ops computed by different code paths. A shared
-bug can survive one op's oracle (both sides wrong the same way) but
-not an identity against a differently-constructed op — the same
-defense-in-depth as tests/test_cross_assert.py, applied to the staged
-waves before activation."""
+"""Cross-assertions between INDEPENDENT wave B-G operators
+(operators/staged_r6..r11): identities that must hold between ops
+computed by different code paths. A shared bug can survive one op's
+oracle (both sides wrong the same way) but not an identity against a
+differently-constructed op — the same defense-in-depth as
+tests/test_cross_assert.py."""
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
 
-from etl_intraday_bidask_spark.operators.staged_r6 import STAGED
-from etl_intraday_bidask_spark.operators.staged_r7 import STAGED_R7
+from etl_intraday_bidask_spark.registry import load_all_operators
 from etl_intraday_bidask_spark.tables import load
 from tests.conftest import SF_SMALL
+
+REGISTRY = load_all_operators()
 
 
 def test_pareto_and_gini_agree_on_population(spark):
@@ -20,13 +21,13 @@ def test_pareto_and_gini_agree_on_population(spark):
     grain; their per-nation customer counts must match exactly."""
     pareto = {
         r["n_name"]: r["n_customers"]
-        for r in STAGED["agg_pareto_cumshare"].spark_fn(
+        for r in REGISTRY["agg_pareto_cumshare"].spark_fn(
             spark, SF_SMALL
         ).collect()
     }
     gini = {
         r["n_name"]: r["n_customers"]
-        for r in STAGED["agg_gini_concentration"].spark_fn(
+        for r in REGISTRY["agg_gini_concentration"].spark_fn(
             spark, SF_SMALL
         ).collect()
     }
@@ -37,8 +38,8 @@ def test_triangle_count_matches_clustering_coefficient(spark):
     """graph_triangle_count (wave A) and graph_clustering_coefficient
     (wave C) build the co-purchase graph independently; their triangle
     censuses must agree."""
-    tri = STAGED["graph_triangle_count"].spark_fn(spark, SF_SMALL).collect()[0]
-    cc = STAGED_R7["graph_clustering_coefficient"].spark_fn(
+    tri = REGISTRY["graph_triangle_count"].spark_fn(spark, SF_SMALL).collect()[0]
+    cc = REGISTRY["graph_clustering_coefficient"].spark_fn(
         spark, SF_SMALL
     ).collect()[0]
     assert tri["n_triangles"] == cc["n_triangles"]
@@ -51,8 +52,8 @@ def test_degree_distribution_accounts_for_all_vertices(spark):
     """The degree histogram's node total must equal the triangle op's
     vertex census, and the CCDF at the minimum degree must equal the
     total (every node has at least the minimum degree)."""
-    tri = STAGED["graph_triangle_count"].spark_fn(spark, SF_SMALL).collect()[0]
-    hist = STAGED_R7["graph_degree_distribution"].spark_fn(
+    tri = REGISTRY["graph_triangle_count"].spark_fn(spark, SF_SMALL).collect()[0]
+    hist = REGISTRY["graph_degree_distribution"].spark_fn(
         spark, SF_SMALL
     ).collect()
     assert sum(r["n_nodes"] for r in hist) == tri["n_vertices"]
@@ -62,7 +63,7 @@ def test_degree_distribution_accounts_for_all_vertices(spark):
 def test_revenue_bridge_reconciles_to_direct_totals(spark):
     """The bridge's category deltas must sum to the directly-computed
     1996-minus-1995 revenue difference, exactly (integer cents)."""
-    bridge = STAGED["orders_revenue_bridge"].spark_fn(
+    bridge = REGISTRY["orders_revenue_bridge"].spark_fn(
         spark, SF_SMALL
     ).collect()
     orders = load(spark, SF_SMALL, "orders")
@@ -80,7 +81,7 @@ def test_revenue_bridge_reconciles_to_direct_totals(spark):
 def test_transition_matrix_counts_all_lag_pairs(spark):
     """Total transitions == n_events - n_users_with_events (every
     event except each user's first contributes exactly one pair)."""
-    trans = STAGED["cep_transition_matrix"].spark_fn(
+    trans = REGISTRY["cep_transition_matrix"].spark_fn(
         spark, SF_SMALL
     ).collect()
     ev = load(spark, SF_SMALL, "events")
@@ -92,7 +93,7 @@ def test_transition_matrix_counts_all_lag_pairs(spark):
 def test_bar_resample_always_consistent(spark):
     """The OHLCV merge identity must hold for every hour — a single
     inconsistent bar means the merge rule is wrong."""
-    bars = STAGED_R7["bidask_bar_resample_check"].spark_fn(
+    bars = REGISTRY["bidask_bar_resample_check"].spark_fn(
         spark, SF_SMALL
     ).collect()
     assert bars, "no bars produced"
@@ -101,7 +102,7 @@ def test_bar_resample_always_consistent(spark):
 
 def test_largest_remainder_alloc_sums_to_budget(spark):
     """Hamilton allocation must hand out exactly the 1000-seat budget."""
-    alloc = STAGED_R7["sample_largest_remainder_alloc"].spark_fn(
+    alloc = REGISTRY["sample_largest_remainder_alloc"].spark_fn(
         spark, SF_SMALL
     ).collect()
     assert sum(r["alloc"] for r in alloc) == 1000
@@ -110,10 +111,10 @@ def test_largest_remainder_alloc_sums_to_budget(spark):
 def test_active_users_dau_matches_cumulative_uniques_day_one(spark):
     """On the first observed day, DAU == that day's new-user count in
     the cumulative-uniques curve (everyone active is new)."""
-    act = STAGED["events_active_users_rolling"].spark_fn(
+    act = REGISTRY["events_active_users_rolling"].spark_fn(
         spark, SF_SMALL
     ).collect()
-    cum = STAGED_R7["events_cumulative_uniques"].spark_fn(
+    cum = REGISTRY["events_cumulative_uniques"].spark_fn(
         spark, SF_SMALL
     ).collect()
     assert act[0]["day_us"] == cum[0]["day_us"]
@@ -122,15 +123,12 @@ def test_active_users_dau_matches_cumulative_uniques_day_one(spark):
 
 # ---- wave D/E cross-assertions (round 6) ---------------------------
 
-from etl_intraday_bidask_spark.operators.staged_r8 import STAGED_R8
-from etl_intraday_bidask_spark.operators.staged_r9 import STAGED_R9
-
 
 def test_auc_rank_identity_holds(spark):
     """The Mann-Whitney rank-sum route and the direct doubled-U route
     must compute the same 2U on the real fixture (the op grades the
     flag; this pins it true)."""
-    row = STAGED_R8["eval_auc_rank_identity"].spark_fn(
+    row = REGISTRY["eval_auc_rank_identity"].spark_fn(
         spark, SF_SMALL
     ).collect()[0]
     assert row["identity_holds"] == 1
@@ -140,9 +138,9 @@ def test_auc_rank_identity_holds(spark):
 def test_auc_consistent_across_ops(spark):
     """eval_auc_exact, the rank-identity op, and the KS op all reduce
     the same scored stream: class totals must agree everywhere."""
-    auc = STAGED_R8["eval_auc_exact"].spark_fn(spark, SF_SMALL).collect()[0]
-    ks = STAGED_R8["eval_ks_statistic"].spark_fn(spark, SF_SMALL).collect()[0]
-    ident = STAGED_R8["eval_auc_rank_identity"].spark_fn(
+    auc = REGISTRY["eval_auc_exact"].spark_fn(spark, SF_SMALL).collect()[0]
+    ks = REGISTRY["eval_ks_statistic"].spark_fn(spark, SF_SMALL).collect()[0]
+    ident = REGISTRY["eval_auc_rank_identity"].spark_fn(
         spark, SF_SMALL
     ).collect()[0]
     assert auc["n_pos"] == ks["n_pos"] == ident["n_pos"]
@@ -153,7 +151,7 @@ def test_auc_consistent_across_ops(spark):
 def test_markov_removal_effect_bounds(spark):
     """Removing a channel can only lose conversion probability, and
     probabilities stay in [0, 1e6] ppm."""
-    row = STAGED_R9["attr_markov_removal_effect"].spark_fn(
+    row = REGISTRY["attr_markov_removal_effect"].spark_fn(
         spark, SF_SMALL
     ).collect()[0]
     assert 0 <= row["conv_removed_ppm"] <= row["conv_base_ppm"] <= 1000000
@@ -167,7 +165,7 @@ def test_attribution_credit_conservation(spark):
     up to integral-division flooring: total credit must be within
     n_paths * (max touches per path) bp of exact, and never exceed
     exact."""
-    rows = STAGED_R9["attr_linear_multitouch"].spark_fn(
+    rows = REGISTRY["attr_linear_multitouch"].spark_fn(
         spark, SF_SMALL
     ).collect()
     total_credit = sum(r["credit_sum_bp"] for r in rows)
@@ -175,7 +173,7 @@ def test_attribution_credit_conservation(spark):
     # role census: 'first' appears exactly once per path.
     roles = {
         r["role"]: r
-        for r in STAGED_R9["attr_position_u_shaped"]
+        for r in REGISTRY["attr_position_u_shaped"]
         .spark_fn(spark, SF_SMALL)
         .collect()
     }
@@ -190,7 +188,7 @@ def test_pacf_closed_form_from_graded_acf(spark):
     """PACF(2) = (r2 - r1^2)/(1 - r1^2) derived from the graded r1/r2
     must be a valid partial correlation (|phi22| <= 1) — the
     Durbin-Levinson sanity the op's docstring promises."""
-    row = STAGED_R9["ts_pacf_lag2_exact"].spark_fn(
+    row = REGISTRY["ts_pacf_lag2_exact"].spark_fn(
         spark, SF_SMALL
     ).collect()[0]
     r1, r2 = row["r1"], row["r2"]
@@ -202,7 +200,7 @@ def test_pacf_closed_form_from_graded_acf(spark):
 def test_little_law_identity_holds(spark):
     """The sweep-line integral must equal the per-order duration sum
     on the real fixture (the op grades the flag; this pins it)."""
-    row = STAGED_R8["orders_little_law_identity"].spark_fn(
+    row = REGISTRY["orders_little_law_identity"].spark_fn(
         spark, SF_SMALL
     ).collect()[0]
     assert row["identity_holds"] == 1
@@ -211,10 +209,10 @@ def test_little_law_identity_holds(spark):
 def test_coverage_and_gini_read_same_lists(spark):
     """Catalog coverage and exposure Gini run over the same top-5
     lists: exposed-part counts must agree."""
-    c = STAGED_R8["eval_catalog_coverage_topk"].spark_fn(
+    c = REGISTRY["eval_catalog_coverage_topk"].spark_fn(
         spark, SF_SMALL
     ).collect()[0]
-    g = STAGED_R8["eval_exposure_gini_topk"].spark_fn(
+    g = REGISTRY["eval_exposure_gini_topk"].spark_fn(
         spark, SF_SMALL
     ).collect()[0]
     assert c["n_exposed"] == g["n_exposed_parts"]
@@ -224,7 +222,7 @@ def test_vpin_imbalance_bounded_by_volume(spark):
     """|buy - sell| per bucket can never exceed bucket volume, so the
     aggregate imbalance is bounded by total volume and VPIN <= 10000
     bp."""
-    row = STAGED_R9["bidask_vpin_volume_buckets"].spark_fn(
+    row = REGISTRY["bidask_vpin_volume_buckets"].spark_fn(
         spark, SF_SMALL
     ).collect()[0]
     assert row["sum_abs_imbalance"] <= row["total_volume"]
@@ -236,7 +234,7 @@ def test_stl_seasonal_components_sum_near_zero(spark):
     across the 24 hours (each d_scaled is a deviation from a local
     24-window mean): the total seasonal mass must be tiny relative to
     the series scale."""
-    rows = STAGED_R9["ts_stl_lite_hourly"].spark_fn(
+    rows = REGISTRY["ts_stl_lite_hourly"].spark_fn(
         spark, SF_SMALL
     ).collect()
     total = sum(r["seasonal_sum_scaled"] for r in rows)
@@ -248,7 +246,7 @@ def test_k_anonymity_rows_reconcile(spark):
     """The k-bucket census must account for every customer row."""
     import duckdb
 
-    rows = STAGED_R9["gov_k_anonymity_census"].spark_fn(
+    rows = REGISTRY["gov_k_anonymity_census"].spark_fn(
         spark, SF_SMALL
     ).collect()
     con = duckdb.connect()
@@ -267,17 +265,15 @@ def test_timeout_sensitivity_monotone_and_anchored(spark):
     and the 30-minute row must equal the independently-computed
     session count from events_session_bounce_rate (different code
     path: VALUES fan-out over gap counts vs full sessionization)."""
-    from etl_intraday_bidask_spark.operators.staged_r11 import STAGED_R11
-
     rows = {
         r["timeout_min"]: r["n_sessions"]
-        for r in STAGED_R11["sessionize_timeout_sensitivity"]
+        for r in REGISTRY["sessionize_timeout_sensitivity"]
         .spark_fn(spark, SF_SMALL)
         .collect()
     }
     assert rows[10] >= rows[30] >= rows[60] > 0
     bounce = (
-        STAGED_R11["events_session_bounce_rate"]
+        REGISTRY["events_session_bounce_rate"]
         .spark_fn(spark, SF_SMALL)
         .agg(F.sum("n_sessions"))
         .collect()[0][0]
@@ -291,8 +287,6 @@ def test_timeout_sensitivity_monotone_and_anchored(spark):
 def test_trimmed_mean_within_priority_extremes(spark):
     """The 10% trimmed mean must lie within [min, max] of each
     priority's order values, and keep 80%(+-rounding) of rows."""
-    from etl_intraday_bidask_spark.operators.staged_r11 import STAGED_R11
-
     base = (
         load(spark, SF_SMALL, "orders")
         .groupBy("o_orderpriority")
@@ -305,7 +299,7 @@ def test_trimmed_mean_within_priority_extremes(spark):
     )
     bounds = {r["o_orderpriority"]: r for r in base}
     for r in (
-        STAGED_R11["agg_trimmed_mean_exact"].spark_fn(spark, SF_SMALL).collect()
+        REGISTRY["agg_trimmed_mean_exact"].spark_fn(spark, SF_SMALL).collect()
     ):
         b = bounds[r["priority"]]
         assert b["lo"] <= r["trimmed_mean"] <= b["hi"]
@@ -316,17 +310,15 @@ def test_vocab_coverage_and_hapax_read_same_vocab(spark):
     """text_vocab_coverage_topk and text_hapax_legomena_ratio reduce
     the same (lang, type) grain independently; vocab sizes and token
     totals must agree, and top1000 coverage must dominate top100."""
-    from etl_intraday_bidask_spark.operators.staged_r11 import STAGED_R11
-
     cov = {
         r["lang"]: r
-        for r in STAGED_R11["text_vocab_coverage_topk"]
+        for r in REGISTRY["text_vocab_coverage_topk"]
         .spark_fn(spark, SF_SMALL)
         .collect()
     }
     hap = {
         r["lang"]: r
-        for r in STAGED_R11["text_hapax_legomena_ratio"]
+        for r in REGISTRY["text_hapax_legomena_ratio"]
         .spark_fn(spark, SF_SMALL)
         .collect()
     }
@@ -340,10 +332,8 @@ def test_vocab_coverage_and_hapax_read_same_vocab(spark):
 def test_mann_whitney_u_bounds(spark):
     """2U is bounded by [0, 2*n_a*n_b] and the centered statistic is
     consistent with its definition."""
-    from etl_intraday_bidask_spark.operators.staged_r11 import STAGED_R11
-
     r = (
-        STAGED_R11["agg_mann_whitney_u_exact"]
+        REGISTRY["agg_mann_whitney_u_exact"]
         .spark_fn(spark, SF_SMALL)
         .collect()[0]
     )
@@ -353,10 +343,8 @@ def test_mann_whitney_u_bounds(spark):
 
 def test_kappa_bounded_and_cells_reconcile(spark):
     """Cohen's kappa in [-1, 1]; the 2x2 cells sum to n."""
-    from etl_intraday_bidask_spark.operators.staged_r11 import STAGED_R11
-
     r = (
-        STAGED_R11["eval_cohens_kappa_rules"]
+        REGISTRY["eval_cohens_kappa_rules"]
         .spark_fn(spark, SF_SMALL)
         .collect()[0]
     )
@@ -367,10 +355,8 @@ def test_kappa_bounded_and_cells_reconcile(spark):
 def test_interval_union_bounded_by_naive_sum(spark):
     """Merged coverage can never exceed 5 minutes per event (the
     unmerged total) nor fall below 5 minutes per user."""
-    from etl_intraday_bidask_spark.operators.staged_r11 import STAGED_R11
-
     cov = (
-        STAGED_R11["events_interval_union_coverage"]
+        REGISTRY["events_interval_union_coverage"]
         .spark_fn(spark, SF_SMALL)
         .agg(F.sum("total_minutes"), F.sum("n_users"))
         .collect()[0]
@@ -385,12 +371,11 @@ def test_interval_union_bounded_by_naive_sum(spark):
 def test_new_vs_repeat_reconciles_with_monthly_revenue(spark):
     """new_cents + repeat_cents must equal the month's total revenue
     (computed independently), every month."""
-    from etl_intraday_bidask_spark.operators.staged_r11 import STAGED_R11
     from etl_intraday_bidask_spark.functions.parity import scaled_long
 
     op = {
         r["month_us"]: r["new_cents"] + r["repeat_cents"]
-        for r in STAGED_R11["orders_new_vs_repeat_monthly"]
+        for r in REGISTRY["orders_new_vs_repeat_monthly"]
         .spark_fn(spark, SF_SMALL)
         .collect()
     }
@@ -409,10 +394,9 @@ def test_new_vs_repeat_reconciles_with_monthly_revenue(spark):
 def test_fiscal_445_conserves_revenue_and_orders(spark):
     """The 4-4-5 mapping is a partition of all orders: period totals
     must sum to the global totals, and periods run 1..12."""
-    from etl_intraday_bidask_spark.operators.staged_r11 import STAGED_R11
     from etl_intraday_bidask_spark.functions.parity import scaled_long
 
-    df = STAGED_R11["orders_fiscal_445_calendar"].spark_fn(spark, SF_SMALL)
+    df = REGISTRY["orders_fiscal_445_calendar"].spark_fn(spark, SF_SMALL)
     agg = df.agg(
         F.sum("n_orders"), F.sum("revenue_cents"), F.min("fiscal_period"),
         F.max("fiscal_period"),
@@ -434,10 +418,8 @@ def test_backlog_sweep_ends_at_zero_or_open(spark):
     equals the count of orders whose completion month is their order
     month subtracted out — i.e. 0 when every order eventually ships
     within the data window (+1/-1 deltas cancel)."""
-    from etl_intraday_bidask_spark.operators.staged_r11 import STAGED_R11
-
     rows = (
-        STAGED_R11["orders_backlog_timeseries"]
+        REGISTRY["orders_backlog_timeseries"]
         .spark_fn(spark, SF_SMALL)
         .collect()
     )
@@ -448,18 +430,16 @@ def test_backlog_sweep_ends_at_zero_or_open(spark):
 def test_simhash_balance_and_prune_consistency(spark):
     """Every SimHash plane covers all vectors; the norm-bound prune
     report's candidate census matches the embeddings table."""
-    from etl_intraday_bidask_spark.operators.staged_r11 import STAGED_R11
-
     n_vec = load(spark, SF_SMALL, "embeddings").count()
     bal = (
-        STAGED_R11["embed_simhash_bit_balance"]
+        REGISTRY["embed_simhash_bit_balance"]
         .spark_fn(spark, SF_SMALL)
         .collect()
     )
     assert len(bal) == 16
     assert all(r["n_vectors"] == n_vec for r in bal)
     prune = (
-        STAGED_R11["knn_norm_bound_prune"].spark_fn(spark, SF_SMALL).collect()[0]
+        REGISTRY["knn_norm_bound_prune"].spark_fn(spark, SF_SMALL).collect()[0]
     )
     assert prune["n_candidates"] == n_vec - 1
     assert 0 <= prune["n_prunable"] <= prune["n_candidates"]

@@ -1,74 +1,25 @@
-"""Activation-time dtype guards, applied to the staged backlog NOW.
+"""Dtype-kind parity for the wave D-H operators (operators/staged_r8..r12).
 
-Round-7 lesson: `subquery_correlated_scalar` staged with an oracle
-whose share column was HUGEINT (an uncast correlated `sum(BIGINT)`
-divisor) and the staged harness didn't notice — the hole only
-surfaced when wave C activated and `tests/test_parity.py`'s
-`assert_dtype_parity` first saw the op. The driver's hash happened to
-survive (the values fit float64 losslessly), but that is luck, not
-policy: pandas coerces int128 to float64, which is exactly how
-`dedup_simhash` hash-failed in round 1. This module runs the same
-dtype guard over EVERY staged wave so the next such oracle fails the
-day it is staged, four rounds before it can reach a grading window.
-
-Scalar columns get the full engine-kind comparison from test_parity;
-nested types (array/map/struct — a handful of staged ops emit them)
-only assert the HUGEINT ban, since the verbatim-kind clause would
-false-positive on spelling (`array<bigint>` vs `BIGINT[]`).
-
-Cheap by construction: Spark dtypes come from plan analysis and
-DuckDB types from relation planning — nothing executes.
+``test_staged_dtype_parity`` keeps this module's per-operator test IDs; it
+calls the analysis-only dtype check of tests/test_parity.py, which also
+covers embed_pca_top2_deflation in the default tier without executing it.
 """
 
 from __future__ import annotations
 
 import pytest
 
-from etl_intraday_bidask_spark.operators.staged_r8 import STAGED_R8
-from etl_intraday_bidask_spark.operators.staged_r9 import STAGED_R9
-from etl_intraday_bidask_spark.operators.staged_r10 import STAGED_R10
-from etl_intraday_bidask_spark.operators.staged_r11 import STAGED_R11
-from etl_intraday_bidask_spark.operators.staged_r12 import STAGED_R12
-from tests.conftest import SF_SMALL
-from tests.test_parity import _SPARK_KIND, _duck_kind
+from tests.test_parity import REGISTRY, check_dtypes, module_ops
 
-ALL_STAGED = {}
-for _wave in (STAGED_R8, STAGED_R9, STAGED_R10, STAGED_R11,
-              STAGED_R12):
-    ALL_STAGED.update(_wave)
-
-ORACLED = sorted(n for n, s in ALL_STAGED.items() if s.oracle_sql)
-
-
-def _is_nested(t: str) -> bool:
-    t = t.lower()
-    if t.startswith("decimal"):  # parenthesized but scalar
-        return False
-    return any(k in t for k in ("array", "map", "struct", "[]", "(", "<"))
+ORACLED = [
+    n
+    for n in module_ops(
+        "staged_r8", "staged_r9", "staged_r10", "staged_r11", "staged_r12"
+    )
+    if REGISTRY[n].oracle_sql
+]
 
 
 @pytest.mark.parametrize("name", ORACLED)
 def test_staged_dtype_parity(spark, duck_small, name):
-    spec = ALL_STAGED[name]
-    s_types = dict(spec.spark_fn(spark, SF_SMALL).dtypes)
-    rel = duck_small.sql(spec.oracle_sql)
-    d_types = {c: str(t).upper() for c, t in zip(rel.columns, rel.types)}
-
-    assert sorted(s_types) == sorted(d_types), (
-        f"{name}: column names differ: {sorted(s_types)} vs {sorted(d_types)}"
-    )
-    huge = [c for c, t in d_types.items() if "HUGEINT" in t]
-    assert not huge, (
-        f"{name}: oracle columns {huge} are HUGEINT — cast to BIGINT "
-        "(pandas coerces int128 to float64 in the driver's hasher)"
-    )
-    for c, st in s_types.items():
-        dt = d_types[c]
-        if _is_nested(st) or _is_nested(dt):
-            continue
-        sk = _SPARK_KIND.get(st, st)
-        dk = _duck_kind(dt)
-        assert sk == dk, (
-            f"{name}.{c}: dtype kind differs: spark {st} ({sk}) "
-            f"vs duckdb {dt} ({dk})"
-        )
+    check_dtypes(spark, duck_small, name)

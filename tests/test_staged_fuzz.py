@@ -1,10 +1,10 @@
-"""Fuzzed oracle parity for the STAGED round-6 wave: the same
-adversarial micro-fixtures as tests/test_fuzz_parity.py (duplicate
-timestamps, null JSON, unicode tokens, month-boundary dates, empty
-tables) driven through every staged operator BEFORE round 6 registers
-it — activation starts from edge-tested code, not fixture-shaped code.
+"""Fuzzed oracle parity for the wave B-H operators
+(operators/staged_r6..r12): the same adversarial micro-fixtures as
+tests/test_fuzz_parity.py (duplicate timestamps, null JSON, unicode
+tokens, month-boundary dates, empty tables), so the waves are
+edge-tested, not only fixture-shaped.
 
-max_examples is kept small (the staged wave is wide); derandomize=True
+max_examples is kept small (the waves are wide); derandomize=True
 keeps the run deterministic.
 """
 
@@ -15,18 +15,7 @@ import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from etl_intraday_bidask_spark.operators.staged_r6 import STAGED
-from etl_intraday_bidask_spark.operators.staged_r7 import STAGED_R7
-from etl_intraday_bidask_spark.operators.staged_r8 import STAGED_R8
-from etl_intraday_bidask_spark.operators.staged_r9 import STAGED_R9
-from etl_intraday_bidask_spark.operators.staged_r10 import STAGED_R10
-from etl_intraday_bidask_spark.operators.staged_r11 import STAGED_R11
-from etl_intraday_bidask_spark.operators.staged_r12 import STAGED_R12
-
-# Merge waves C through H into the fuzz-drivable spec pool
-# (separate dicts by design; see staged_r7/8/9/10/11/12.py).
-_ALL_STAGED = {**STAGED, **STAGED_R7, **STAGED_R8, **STAGED_R9,
-               **STAGED_R10, **STAGED_R11, **STAGED_R12}
+from etl_intraday_bidask_spark.registry import load_all_operators
 from tests.test_fuzz_parity import (
     _stage,
     docs_strategy,
@@ -35,11 +24,13 @@ from tests.test_fuzz_parity import (
 )
 from tests.test_parity import normalize
 
+REGISTRY = load_all_operators()
+
 # Battery tier (VERDICT r14 item 6): the staged-wave fuzz suites are
 # the single heaviest block of the battery (~8 min); builder cadence.
 pytestmark = pytest.mark.battery
 
-EVENT_STAGED = [
+EVENT_OPS = [
     # wave-G additions (round 7)
     "events_stickiness_dau_wau",
     "events_session_bounce_rate",
@@ -213,7 +204,7 @@ EVENT_STAGED = [
     "graph_degree_assortativity",
 ]
 
-DOC_STAGED = [
+DOC_OPS = [
     "text_compression_ratio_proxy",
     "corpus_source_syndication_matrix",
     "multimodal_fixed_chunking",
@@ -243,7 +234,7 @@ DOC_STAGED = [
 ]
 
 # Wave-H doc-driven additions (round 8)
-DOC_STAGED_H = [
+DOC_OPS_H = [
     "text_word_length_profile",
     "text_token_gini_by_lang",
     "text_rake_keyword_lite",
@@ -254,7 +245,7 @@ DOC_STAGED_H = [
 ]
 
 # Wave-G doc-driven additions (round 7)
-DOC_STAGED_G = [
+DOC_OPS_G = [
     "text_hapax_legomena_ratio",
     "text_vocab_coverage_topk",
     "text_token_length_histogram",
@@ -265,7 +256,7 @@ DOC_STAGED_G = [
     "text_term_burstiness_fano",
 ]
 
-ORDER_STAGED = [
+ORDER_OPS = [
     # Wave H (round 8)
     "sql_distinct_on_emulation",
     "sql_exists_flag_projection",
@@ -338,7 +329,7 @@ ORDER_STAGED = [
 # Wave-B lineitem op: the fuzz lineitem's CONSTANT l_tax (zero variance)
 # makes the OLS normal equations singular on every example — exactly the
 # det==0 guard this list exists to exercise.
-LINEITEM_STAGED = [
+LINEITEM_OPS = [
     # Wave H (round 8)
     "lineitem_charge_reconcile_ties",
     "dq_referential_census_all_fks",
@@ -383,7 +374,7 @@ def _assert_staged_parity(spark, variant: str, ops: list[str]) -> None:
         )
     try:
         for op in ops:
-            spec = _ALL_STAGED[op]
+            spec = REGISTRY[op]
             df = spec.spark_fn(spark, variant)
             s_rows, s_cols = df.collect(), df.columns
             rel = con.sql(spec.oracle_sql)
@@ -428,7 +419,7 @@ def test_staged_event_ops_fuzzed(spark, tmp_path_factory, rows):
     variant = _stage(
         str(tmp_path_factory.mktemp("sfuzz_ev")), "events", tbl
     )
-    _assert_staged_parity(spark, variant, EVENT_STAGED)
+    _assert_staged_parity(spark, variant, EVENT_OPS)
 
 
 @settings(**_SETTINGS)
@@ -447,7 +438,7 @@ def test_staged_doc_ops_fuzzed(spark, tmp_path_factory, rows):
     variant = _stage(
         str(tmp_path_factory.mktemp("sfuzz_doc")), "documents", tbl
     )
-    _assert_staged_parity(spark, variant, DOC_STAGED + DOC_STAGED_G + DOC_STAGED_H)
+    _assert_staged_parity(spark, variant, DOC_OPS + DOC_OPS_G + DOC_OPS_H)
 
 
 @settings(**_SETTINGS)
@@ -468,7 +459,7 @@ def test_staged_order_ops_fuzzed(spark, tmp_path_factory, rows):
     variant = _stage(
         str(tmp_path_factory.mktemp("sfuzz_ord")), "orders", tbl
     )
-    _assert_staged_parity(spark, variant, ORDER_STAGED)
+    _assert_staged_parity(spark, variant, ORDER_OPS)
 
 
 from tests.test_fuzz_parity import lineitem_strategy  # noqa: E402
@@ -510,7 +501,7 @@ def test_staged_lineitem_ops_fuzzed(spark, tmp_path_factory, rows):
     variant = _stage(
         str(tmp_path_factory.mktemp("sfuzz_li")), "lineitem", tbl
     )
-    _assert_staged_parity(spark, variant, LINEITEM_STAGED)
+    _assert_staged_parity(spark, variant, LINEITEM_OPS)
 
 
 def test_kcore_path_graph_counter_example(spark, tmp_path_factory):
@@ -540,7 +531,7 @@ def test_kcore_path_graph_counter_example(spark, tmp_path_factory):
     )
     got = {
         r["peel"]: (r["n_nodes"], r["n_edges"])
-        for r in _ALL_STAGED["graph_kcore_peel"]
+        for r in REGISTRY["graph_kcore_peel"]
         .spark_fn(spark, variant)
         .collect()
     }
@@ -556,7 +547,7 @@ def test_kcore_path_graph_counter_example(spark, tmp_path_factory):
 # (the oracle's negative-floor-division correction), and shared
 # (nation, segment) quasi-identifier tuples (k-anonymity classes of
 # size 1 through 6+).
-CUSTOMER_STAGED = [
+CUSTOMER_OPS = [
     "gov_k_anonymity_census",
     "gov_pseudonymize_consistent",
     "join_trigram_fuzzy_names",
@@ -607,7 +598,7 @@ def test_staged_customer_ops_fuzzed(spark, tmp_path_factory, rows):
     variant = _stage(
         str(tmp_path_factory.mktemp("sfuzz_cust")), "customer", tbl
     )
-    _assert_staged_parity(spark, variant, CUSTOMER_STAGED)
+    _assert_staged_parity(spark, variant, CUSTOMER_OPS)
 
 
 def test_trigram_fuzzy_match_fires_on_typo_twin(spark, tmp_path_factory):
@@ -635,7 +626,7 @@ def test_trigram_fuzzy_match_fires_on_typo_twin(spark, tmp_path_factory):
     variant = _stage(
         str(tmp_path_factory.mktemp("trigram_pin")), "customer", tbl
     )
-    spec = _ALL_STAGED["join_trigram_fuzzy_names"]
+    spec = REGISTRY["join_trigram_fuzzy_names"]
     row = spec.spark_fn(spark, variant).collect()[0]
     assert row["n_fuzzy_matches"] == 1, row
     assert row["max_shared_grams"] >= 12, row

@@ -1,19 +1,23 @@
-"""Physical-plan audits for the staged round-6 wave B
-(operators/staged_r6b.py): each op's scale claim names a plan property
-— assert it before activation, same discipline as tests/test_plans.py
-but driven off the STAGED dict since the wave is unregistered."""
+"""Physical-plan audits for the wave B-H operators
+(operators/staged_r6..r12): each op's scale claim names a plan property
+— the same discipline as tests/test_plans.py."""
 
 from __future__ import annotations
 
 import contextlib
 import io
 
-from etl_intraday_bidask_spark.operators.staged_r6 import STAGED
+import pytest
+
+from etl_intraday_bidask_spark.registry import load_all_operators
 from tests.conftest import SF_SMALL
+from tests.test_parity import module_ops
+
+REGISTRY = load_all_operators()
 
 
 def staged_plan(spark, name: str) -> str:
-    df = STAGED[name].spark_fn(spark, SF_SMALL)
+    df = REGISTRY[name].spark_fn(spark, SF_SMALL)
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
         df.explain("formatted")
@@ -107,22 +111,12 @@ def test_revenue_bridge_pushes_year_filter(spark):
 
 # --- wave C (staged_r7) plan audits ---
 
-from etl_intraday_bidask_spark.operators.staged_r7 import STAGED_R7
-
-
-def staged7_plan(spark, name: str) -> str:
-    df = STAGED_R7[name].spark_fn(spark, SF_SMALL)
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    return buf.getvalue()
-
 
 def test_merkle_digests_are_pure_aggregates(spark):
     """etl_merkle_reconcile's whole point is mergeable sum-of-digest
     buckets: hash aggregates + one equi join on bucket, no Python
     eval, no nested loop, no window."""
-    plan = staged7_plan(spark, "etl_merkle_reconcile")
+    plan = staged_plan(spark, "etl_merkle_reconcile")
     for banned in (
         "CartesianProduct",
         "BroadcastNestedLoopJoin",
@@ -138,7 +132,7 @@ def test_market_beta_broadcasts_market_series(spark):
     """The hourly market series must BROADCAST onto the (user, hour)
     grain — shuffling the fact side against a calendar-bounded series
     would be backwards."""
-    plan = staged7_plan(spark, "bidask_market_beta_per_user")
+    plan = staged_plan(spark, "bidask_market_beta_per_user")
     assert "BroadcastHashJoin" in plan
     assert "CartesianProduct" not in plan
 
@@ -147,7 +141,7 @@ def test_ols_and_corr_are_join_free_single_aggregates(spark):
     """The exact-moment statistics reduce in one pass: no joins in the
     moment computation (corr's 3-row assembly unions scalar rows)."""
     for name in ("agg_corr_matrix_pairwise",):
-        plan = staged7_plan(spark, name)
+        plan = staged_plan(spark, name)
         assert "SortMergeJoin" not in plan
         assert "CartesianProduct" not in plan
         assert "HashAggregate" in plan
@@ -157,7 +151,7 @@ def test_dup_payment_join_is_equi_on_amount(spark):
     """dq_duplicate_payment_detect claims amount-as-blocking-key: the
     self-join must be a hash/sort-merge EQUI join (custkey, cents),
     never a nested loop over all order pairs."""
-    plan = staged7_plan(spark, "dq_duplicate_payment_detect")
+    plan = staged_plan(spark, "dq_duplicate_payment_detect")
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert ("SortMergeJoin" in plan) or ("BroadcastHashJoin" in plan)
@@ -167,25 +161,17 @@ def test_cumulative_uniques_windows_on_day_grain_only(spark):
     """The growth curve's running sum must consume the per-day
     aggregate, not raw events: a HashAggregate must sit below the
     Window."""
-    plan = staged7_plan(spark, "events_cumulative_uniques")
+    plan = staged_plan(spark, "events_cumulative_uniques")
     assert "HashAggregate" in plan
     assert plan.count("Exchange") >= 1
     assert "CartesianProduct" not in plan
 
 
-# ---- generic scale-killer sweep for waves D and E (round 6) --------
-# Same two assertions as tests/test_plan_sweep.py, driven off the
-# staged dicts: no unkeyed CartesianProduct (BroadcastNestedLoopJoin
-# is allowed — every occurrence broadcasts a tiny side), and no Python
-# evaluation anywhere (neither wave declares a Python-boundary op).
-
-import pytest
-
-from etl_intraday_bidask_spark.operators.staged_r8 import STAGED_R8
-from etl_intraday_bidask_spark.operators.staged_r9 import STAGED_R9
-from etl_intraday_bidask_spark.operators.staged_r10 import STAGED_R10
-from etl_intraday_bidask_spark.operators.staged_r11 import STAGED_R11
-from etl_intraday_bidask_spark.operators.staged_r12 import STAGED_R12
+# ---- generic scale-killer sweep for waves D-H (round 6) ------------
+# Same two assertions as tests/test_plan_sweep.py: no unkeyed
+# CartesianProduct (BroadcastNestedLoopJoin is allowed — every
+# occurrence broadcasts a tiny side), and no Python evaluation anywhere
+# (no wave D-H op declares a Python-boundary op).
 
 _PY_MARKERS = (
     "BatchEvalPython",
@@ -217,19 +203,16 @@ _SKIP_PLAN = {
     "graph_component_size_histogram",
 }
 
-_WAVE_DE = {**STAGED_R8, **STAGED_R9, **STAGED_R10, **STAGED_R11,
-            **STAGED_R12}
+_WAVE_DE = module_ops(
+    "staged_r8", "staged_r9", "staged_r10", "staged_r11", "staged_r12"
+)
 
 
 @pytest.mark.parametrize(
-    "name", sorted(set(_WAVE_DE) - _SKIP_PLAN)
+    "name", [n for n in _WAVE_DE if n not in _SKIP_PLAN]
 )
 def test_wave_de_plan_has_no_scale_killers(spark, name):
-    df = _WAVE_DE[name].spark_fn(spark, SF_SMALL)
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    plan = buf.getvalue()
+    plan = staged_plan(spark, name)
     assert "CartesianProduct" not in plan, (
         f"{name}: unkeyed cartesian join — add an equi/blocking key"
     )

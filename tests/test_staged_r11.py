@@ -1,68 +1,17 @@
-"""Parity tests for wave G (operators/staged_r11.py).
+"""Wave-G tests (operators/staged_r11.py).
 
-Staged in round 7, ACTIVATED in round 11 — the registry-driven sweeps
-now cover these ops too; this file keeps the direct oracle-parity
-drive plus the activation guard that pins the round-11 window
-composition."""
+``test_staged_r11_parity`` keeps this module's per-operator test IDs;
+it calls the one registry parity check in tests/test_parity.py
+and replays that check's verdict when it has already run.
+"""
 
 from __future__ import annotations
 
 import pytest
 
-from etl_intraday_bidask_spark.operators.staged_r11 import STAGED_R11
-from tests.conftest import SF_SMALL
-from tests.test_parity import normalize
+from tests.test_parity import check_parity, module_ops
 
 
-@pytest.mark.parametrize("name", sorted(STAGED_R11))
-def test_staged_r11_parity(spark, duck_small, name):
-    spec = STAGED_R11[name]
-    df = spec.spark_fn(spark, SF_SMALL)
-    s_rows, s_cols = df.collect(), df.columns
-    if spec.oracle_sql is None:
-        assert len(s_rows) >= 1
-        return
-    rel = duck_small.sql(spec.oracle_sql)
-    d_rows, d_cols = rel.fetchall(), list(rel.columns)
-    assert sorted(s_cols) == sorted(d_cols)
-    assert len(s_rows) == len(d_rows)
-    assert normalize(s_rows, s_cols) == normalize(d_rows, d_cols)
-
-
-def test_wave_g_activated():
-    """Round 11 activated wave G: all 50 staged_r11 ops are in the
-    global registry with their exact staged specs, and the wave is
-    exactly the driver's 50-slot window (every key never-graded as of
-    r10, everything else green r1-r10). Every wave-G op carries an
-    oracle, so the window is full-hash-match by construction."""
-    import __spark_entry__ as entry
-    from etl_intraday_bidask_spark.operators.staged_r6 import STAGED
-    from etl_intraday_bidask_spark.operators.staged_r7 import STAGED_R7
-    from etl_intraday_bidask_spark.operators.staged_r8 import STAGED_R8
-    from etl_intraday_bidask_spark.operators.staged_r9 import STAGED_R9
-    from etl_intraday_bidask_spark.operators.staged_r10 import (
-        STAGED_R10,
-    )
-    from etl_intraday_bidask_spark.registry import load_all_operators
-
-    registry = load_all_operators()
-    assert len(STAGED_R11) == 50
-    missing = sorted(set(STAGED_R11) - set(registry))
-    assert not missing, f"wave-G ops not activated: {missing}"
-    for name, spec in STAGED_R11.items():
-        assert registry[name] is spec, f"{name}: registry spec diverged"
-        assert spec.oracle_sql is not None, f"{name}: oracle missing"
-    assert set(entry._DEFER_NEW_R11) == set(STAGED_R11), (
-        "_DEFER_NEW_R11 and the staged wave diverge"
-    )
-    overlap = sorted(
-        set(STAGED_R11)
-        & (
-            set(STAGED)
-            | set(STAGED_R7)
-            | set(STAGED_R8)
-            | set(STAGED_R9)
-            | set(STAGED_R10)
-        )
-    )
-    assert not overlap, f"wave G collides with earlier waves: {overlap}"
+@pytest.mark.parametrize("name", module_ops("staged_r11"))
+def test_staged_r11_parity(spark, duck_small, parity_verdicts, name):
+    check_parity(spark, duck_small, parity_verdicts, name)

@@ -1,83 +1,9 @@
-"""Parity tests for the STAGED round-12 wave H operators
-(operators/staged_r12.py) — same harness as tests/test_staged_r6..r11,
-separate dict so earlier activations can't over-register."""
+"""Wave-H tests (operators/staged_r12.py)."""
 
 from __future__ import annotations
 
-import pytest
-
-from etl_intraday_bidask_spark.operators.staged_r12 import STAGED_R12
 from tests.conftest import SF_SMALL
-from tests.test_parity import normalize
-
-
-# Battery tier (VERDICT r14 item 6): this parametrized parity sweep
-# carries the battery's single slowest test (embed_pca_top2_deflation,
-# ~4 min); the module's shape pins stay in the default tier.
-@pytest.mark.battery
-@pytest.mark.parametrize("name", sorted(STAGED_R12))
-def test_staged_r12_parity(spark, duck_small, name):
-    spec = STAGED_R12[name]
-    df = spec.spark_fn(spark, SF_SMALL)
-    s_rows, s_cols = df.collect(), df.columns
-    if spec.oracle_sql is None:
-        assert len(s_rows) > 0, f"{name}: rows-only op returned nothing"
-        return
-    rel = duck_small.sql(spec.oracle_sql)
-    d_rows, d_cols = rel.fetchall(), list(rel.columns)
-    assert sorted(s_cols) == sorted(d_cols), (
-        f"{name}: columns {s_cols} vs {d_cols}"
-    )
-    assert len(s_rows) == len(d_rows), (
-        f"{name}: rows {len(s_rows)} vs {len(d_rows)}"
-    )
-    assert normalize(s_rows, s_cols) == normalize(d_rows, d_cols), (
-        f"{name}: value mismatch"
-    )
-
-
-def test_wave_h_activated():
-    """Round 12 activated wave H (the FINAL staged wave): all 50
-    staged_r12 ops are in the global registry with their exact staged
-    specs, and the wave is exactly the driver's 50-slot window (every
-    key never-graded as of r11, everything else green r1-r11). 49 carry
-    oracles; source_binaryfile_manifest is rows-only by declared design
-    (pinned by test_binaryfile_manifest_matches_ground_truth below)."""
-    import __spark_entry__ as entry
-    from etl_intraday_bidask_spark.operators.staged_r6 import STAGED
-    from etl_intraday_bidask_spark.operators.staged_r7 import STAGED_R7
-    from etl_intraday_bidask_spark.operators.staged_r8 import STAGED_R8
-    from etl_intraday_bidask_spark.operators.staged_r9 import STAGED_R9
-    from etl_intraday_bidask_spark.operators.staged_r10 import STAGED_R10
-    from etl_intraday_bidask_spark.operators.staged_r11 import STAGED_R11
-    from etl_intraday_bidask_spark.registry import load_all_operators
-
-    registry = load_all_operators()
-    assert len(STAGED_R12) == 50
-    missing = sorted(set(STAGED_R12) - set(registry))
-    assert not missing, f"wave-H ops not activated: {missing}"
-    for name, spec in STAGED_R12.items():
-        assert registry[name] is spec, f"{name}: registry spec diverged"
-    assert set(entry._DEFER_NEW_R12) == set(STAGED_R12), (
-        "_DEFER_NEW_R12 and the staged wave diverge"
-    )
-    overlap = sorted(
-        set(STAGED_R12)
-        & (
-            set(STAGED)
-            | set(STAGED_R7)
-            | set(STAGED_R8)
-            | set(STAGED_R9)
-            | set(STAGED_R10)
-            | set(STAGED_R11)
-        )
-    )
-    assert not overlap, f"wave H collides with earlier waves: {overlap}"
-    n_oracled = sum(1 for s in STAGED_R12.values() if s.oracle_sql)
-    assert n_oracled == 49, (
-        "wave H declares exactly one rows-only op "
-        "(source_binaryfile_manifest)"
-    )
+from tests.test_parity import REGISTRY
 
 
 def test_binaryfile_manifest_matches_ground_truth(spark):
@@ -92,7 +18,7 @@ def test_binaryfile_manifest_matches_ground_truth(spark):
 
     out = {
         r["lang"]: r.asDict()
-        for r in STAGED_R12["source_binaryfile_manifest"]
+        for r in REGISTRY["source_binaryfile_manifest"]
         .spark_fn(spark, SF_SMALL)
         .collect()
     }
@@ -111,7 +37,7 @@ def test_kendall_tau_pair_accounting(spark):
     """Cross-assert: concordant + discordant + all tie classes must
     equal the total pair count, and tau-b must sit in [-1, 1]."""
     row = (
-        STAGED_R12["agg_kendall_tau_daily"]
+        REGISTRY["agg_kendall_tau_daily"]
         .spark_fn(spark, SF_SMALL)
         .collect()[0]
     )
@@ -129,7 +55,7 @@ def test_t_closeness_bounded_and_nonvacuous(spark):
     global (nonzero somewhere) — a flat-zero table would mean the
     cross-multiplication collapsed."""
     rows = (
-        STAGED_R12["gov_t_closeness_audit"]
+        REGISTRY["gov_t_closeness_audit"]
         .spark_fn(spark, SF_SMALL)
         .collect()
     )
@@ -200,7 +126,7 @@ def test_scd2_audit_catches_injected_defects(spark):
     assert got[3]["n_open_noncurrent"] == 1
     # and the real fixture audit reports clean invariants with real totals
     audit = (
-        STAGED_R12["etl_scd2_integrity_audit"]
+        REGISTRY["etl_scd2_integrity_audit"]
         .spark_fn(spark, SF_SMALL)
         .collect()[0]
     )
@@ -256,7 +182,7 @@ def test_mode_sliding_tie_break_pinned(spark):
     try:
         rows = {
             r["event_id"]: r.asDict()
-            for r in STAGED_R12["win_mode_sliding"]
+            for r in REGISTRY["win_mode_sliding"]
             .spark_fn(spark, "/synthetic/mode_pin")
             .collect()
         }
@@ -266,7 +192,7 @@ def test_mode_sliding_tie_break_pinned(spark):
     assert rows[4]["mode_n"] == 2
     assert rows[1]["mode_type"] == "b" and rows[1]["mode_n"] == 2
     full = (
-        STAGED_R12["win_mode_sliding"].spark_fn(spark, SF_SMALL).limit(1)
+        REGISTRY["win_mode_sliding"].spark_fn(spark, SF_SMALL).limit(1)
     )
     assert full.columns == ["user_id", "event_id", "mode_type", "mode_n"]
 
@@ -274,7 +200,7 @@ def test_mode_sliding_tie_break_pinned(spark):
 def test_quant_recall_bounds(spark):
     """recall@10 is a 0..1 ratio of an exact 0..10 overlap."""
     row = (
-        STAGED_R12["embed_quant_recall_ab"]
+        REGISTRY["embed_quant_recall_ab"]
         .spark_fn(spark, SF_SMALL)
         .collect()[0]
     )
@@ -306,7 +232,7 @@ def test_holt_fold_matches_python_recurrence(spark):
         tr = 0.5 * (new_l - lvl) + 0.5 * tr
         lvl = new_l
     row = (
-        STAGED_R12["ts_holt_linear_fold"]
+        REGISTRY["ts_holt_linear_fold"]
         .spark_fn(spark, SF_SMALL)
         .collect()[0]
     )
@@ -320,7 +246,7 @@ def test_microprice_dev_bounded_by_half_spread(spark):
     microprice is a convex combination of lo and hi) — a bound the
     exact integer algebra must respect on every hour."""
     rows = (
-        STAGED_R12["bidask_microprice_deviation"]
+        REGISTRY["bidask_microprice_deviation"]
         .spark_fn(spark, SF_SMALL)
         .collect()
     )
@@ -336,7 +262,7 @@ def test_effective_spread_within_quoted(spark):
     ratio is bounded by 10000 bp and the doubled effective sum by
     n * 2 * quoted."""
     rows = (
-        STAGED_R12["bidask_effective_over_quoted"]
+        REGISTRY["bidask_effective_over_quoted"]
         .spark_fn(spark, SF_SMALL)
         .collect()
     )
@@ -355,14 +281,14 @@ def test_word_length_totals_match_gini_totals(spark):
 
     prof = defaultdict(int)
     for r in (
-        STAGED_R12["text_word_length_profile"]
+        REGISTRY["text_word_length_profile"]
         .spark_fn(spark, SF_SMALL)
         .collect()
     ):
         prof[r["lang"]] += r["n_tokens"]
     gini = {
         r["lang"]: r["n_tokens"]
-        for r in STAGED_R12["text_token_gini_by_lang"]
+        for r in REGISTRY["text_token_gini_by_lang"]
         .spark_fn(spark, SF_SMALL)
         .collect()
     }
@@ -377,7 +303,7 @@ def test_heaps_checkpoints_monotone_and_complete(spark):
     from etl_intraday_bidask_spark.tables import load
 
     rows = sorted(
-        STAGED_R12["corpus_heaps_law_checkpoints"]
+        REGISTRY["corpus_heaps_law_checkpoints"]
         .spark_fn(spark, SF_SMALL)
         .collect(),
         key=lambda r: r["n_docs_cap"],
@@ -402,7 +328,7 @@ def test_scc_ids_and_sizes_consistent(spark):
     from collections import Counter
 
     rows = (
-        STAGED_R12["graph_scc_transition_bounded"]
+        REGISTRY["graph_scc_transition_bounded"]
         .spark_fn(spark, SF_SMALL)
         .collect()
     )
@@ -419,7 +345,7 @@ def test_late_data_dropped_monotone_in_watermark(spark):
     """A longer watermark can only drop FEWER events — the sweep's
     operating curve must be nonincreasing."""
     rows = sorted(
-        STAGED_R12["etl_late_data_impact"]
+        REGISTRY["etl_late_data_impact"]
         .spark_fn(spark, SF_SMALL)
         .collect(),
         key=lambda r: r["wm_minutes"],

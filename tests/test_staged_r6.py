@@ -1,55 +1,20 @@
-"""Parity tests for wave B (operators/staged_r6.py + staged_r6b.py).
+"""Wave-B tests (operators/staged_r6.py + staged_r6b.py).
 
-Staged through round 5, ACTIVATED in round 6 — the registry-driven
-sweeps now cover these ops too; this file keeps the direct
-oracle-parity drive (it predates activation and doubles the coverage)
-plus the activation guard that pins the round-6 window composition.
+``test_staged_parity`` keeps this module's per-operator test IDs;
+it calls the one registry parity check in tests/test_parity.py
+and replays that check's verdict when it has already run.
 """
 
 from __future__ import annotations
 
 import pytest
 
-from etl_intraday_bidask_spark.operators.staged_r6 import STAGED
-from tests.conftest import SF_SMALL
-from tests.test_parity import normalize
+from tests.test_parity import REGISTRY, check_parity, module_ops, normalize
 
 
-@pytest.mark.parametrize("name", sorted(STAGED))
-def test_staged_parity(spark, duck_small, name):
-    spec = STAGED[name]
-    df = spec.spark_fn(spark, SF_SMALL)
-    s_rows, s_cols = df.collect(), df.columns
-    rel = duck_small.sql(spec.oracle_sql)
-    d_rows, d_cols = rel.fetchall(), list(rel.columns)
-    assert sorted(s_cols) == sorted(d_cols), (
-        f"{name}: columns {s_cols} vs {d_cols}"
-    )
-    assert len(s_rows) == len(d_rows), (
-        f"{name}: rows {len(s_rows)} vs {len(d_rows)}"
-    )
-    assert normalize(s_rows, s_cols) == normalize(d_rows, d_cols), (
-        f"{name}: value mismatch"
-    )
-
-
-def test_wave_b_activated():
-    """Round 6 activated wave B: all 50 staged_r6/staged_r6b ops are in
-    the global registry with their exact staged specs, and the wave is
-    exactly the driver's 50-slot window (every key never-graded as of
-    r05, everything else green r1-r5)."""
-    import __spark_entry__ as entry
-    from etl_intraday_bidask_spark.registry import load_all_operators
-
-    registry = load_all_operators()
-    assert len(STAGED) == 50
-    missing = sorted(set(STAGED) - set(registry))
-    assert not missing, f"wave-B ops not activated: {missing}"
-    for name, spec in STAGED.items():
-        assert registry[name] is spec, f"{name}: registry spec diverged"
-    assert set(entry._DEFER_NEW_R6) == set(STAGED), (
-        "_DEFER_NEW_R6 and the staged wave diverge"
-    )
+@pytest.mark.parametrize("name", module_ops("staged_r6", "staged_r6b"))
+def test_staged_parity(spark, duck_small, parity_verdicts, name):
+    check_parity(spark, duck_small, parity_verdicts, name)
 
 
 def test_dedup_cross_source_exact_nonvacuous(spark, tmp_path):
@@ -81,10 +46,7 @@ def test_dedup_cross_source_exact_nonvacuous(spark, tmp_path):
     path = str(tmp_path / "documents.parquet")
     pdf.to_parquet(path)
 
-    from etl_intraday_bidask_spark.operators.staged_r6 import STAGED
-    from tests.test_parity import normalize
-
-    spec = STAGED["dedup_cross_source_exact"]
+    spec = REGISTRY["dedup_cross_source_exact"]
     df = spec.spark_fn(spark, str(tmp_path))
     s_rows, s_cols = df.collect(), df.columns
     assert len(s_rows) == 3, f"expected 3 dup-shape groups, got {s_rows}"

@@ -1,57 +1,21 @@
-"""Parity tests for wave C (operators/staged_r7.py).
+"""Wave-C tests (operators/staged_r7.py).
 
-Staged through rounds 5-6, ACTIVATED in round 7 — the registry-driven
-sweeps now cover these ops too; this file keeps the direct
-oracle-parity drive plus the activation guard that pins the round-7
-window composition."""
+``test_staged_r7_parity`` keeps this module's per-operator test IDs;
+it calls the one registry parity check in tests/test_parity.py
+and replays that check's verdict when it has already run.
+"""
 
 from __future__ import annotations
 
 import pytest
 
-from etl_intraday_bidask_spark.operators.staged_r7 import STAGED_R7
 from tests.conftest import SF_SMALL
-from tests.test_parity import normalize
+from tests.test_parity import REGISTRY, check_parity, module_ops, normalize
 
 
-@pytest.mark.parametrize("name", sorted(STAGED_R7))
-def test_staged_r7_parity(spark, duck_small, name):
-    spec = STAGED_R7[name]
-    df = spec.spark_fn(spark, SF_SMALL)
-    s_rows, s_cols = df.collect(), df.columns
-    rel = duck_small.sql(spec.oracle_sql)
-    d_rows, d_cols = rel.fetchall(), list(rel.columns)
-    assert sorted(s_cols) == sorted(d_cols), (
-        f"{name}: columns {s_cols} vs {d_cols}"
-    )
-    assert len(s_rows) == len(d_rows), (
-        f"{name}: rows {len(s_rows)} vs {len(d_rows)}"
-    )
-    assert normalize(s_rows, s_cols) == normalize(d_rows, d_cols), (
-        f"{name}: value mismatch"
-    )
-
-
-def test_wave_c_activated():
-    """Round 7 activated wave C: all 50 staged_r7 ops are in the global
-    registry with their exact staged specs, and the wave is exactly the
-    driver's 50-slot window (every key never-graded as of r06,
-    everything else green r1-r6)."""
-    import __spark_entry__ as entry
-    from etl_intraday_bidask_spark.registry import load_all_operators
-    from etl_intraday_bidask_spark.operators.staged_r6 import STAGED
-
-    registry = load_all_operators()
-    assert len(STAGED_R7) == 50
-    missing = sorted(set(STAGED_R7) - set(registry))
-    assert not missing, f"wave-C ops not activated: {missing}"
-    for name, spec in STAGED_R7.items():
-        assert registry[name] is spec, f"{name}: registry spec diverged"
-    assert set(entry._DEFER_NEW_R7) == set(STAGED_R7), (
-        "_DEFER_NEW_R7 and the staged wave diverge"
-    )
-    overlap = sorted(set(STAGED_R7) & set(STAGED))
-    assert not overlap, f"wave C collides with wave A/B names: {overlap}"
+@pytest.mark.parametrize("name", module_ops("staged_r7"))
+def test_staged_r7_parity(spark, duck_small, parity_verdicts, name):
+    check_parity(spark, duck_small, parity_verdicts, name)
 
 
 def test_dq_detectors_nonvacuous(spark, tmp_path):
@@ -103,7 +67,7 @@ def test_dq_detectors_nonvacuous(spark, tmp_path):
             ("dq_duplicate_payment_detect", 3),
             ("dq_key_gap_detect", 3),
         ]:
-            spec = STAGED_R7[op]
+            spec = REGISTRY[op]
             df = spec.spark_fn(spark, variant)
             s_rows, s_cols = df.collect(), df.columns
             rel = vcon.sql(spec.oracle_sql)

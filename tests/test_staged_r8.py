@@ -1,72 +1,34 @@
-"""Parity tests for wave D (operators/staged_r8.py).
+"""Wave-D tests (operators/staged_r8.py).
 
-Staged through rounds 5-7, ACTIVATED in round 8 — the registry-driven
-sweeps now cover these ops too; this file keeps the direct
-oracle-parity drive plus the activation guard that pins the round-8
-window composition."""
+``test_staged_r8_parity`` keeps this module's per-operator test IDs;
+it calls the one registry parity check in tests/test_parity.py
+and replays that check's verdict when it has already run.
+"""
 
 from __future__ import annotations
 
 import pytest
 
-from etl_intraday_bidask_spark.operators.staged_r8 import STAGED_R8
 from tests.conftest import SF_SMALL
-from tests.test_parity import normalize
+from tests.test_parity import REGISTRY, check_parity, module_ops
 
 
-@pytest.mark.parametrize("name", sorted(STAGED_R8))
-def test_staged_r8_parity(spark, duck_small, name):
-    spec = STAGED_R8[name]
-    df = spec.spark_fn(spark, SF_SMALL)
-    s_rows, s_cols = df.collect(), df.columns
-    rel = duck_small.sql(spec.oracle_sql)
-    d_rows, d_cols = rel.fetchall(), list(rel.columns)
-    assert sorted(s_cols) == sorted(d_cols), (
-        f"{name}: columns {s_cols} vs {d_cols}"
-    )
-    assert len(s_rows) == len(d_rows), (
-        f"{name}: rows {len(s_rows)} vs {len(d_rows)}"
-    )
-    assert normalize(s_rows, s_cols) == normalize(d_rows, d_cols), (
-        f"{name}: value mismatch"
-    )
-
-
-def test_wave_d_activated():
-    """Round 8 activated wave D: all 50 staged_r8 ops are in the global
-    registry with their exact staged specs, and the wave is exactly the
-    driver's 50-slot window (every key never-graded as of r07,
-    everything else green r1-r7)."""
-    import __spark_entry__ as entry
-    from etl_intraday_bidask_spark.operators.staged_r6 import STAGED
-    from etl_intraday_bidask_spark.operators.staged_r7 import STAGED_R7
-    from etl_intraday_bidask_spark.registry import load_all_operators
-
-    registry = load_all_operators()
-    assert len(STAGED_R8) == 50
-    missing = sorted(set(STAGED_R8) - set(registry))
-    assert not missing, f"wave-D ops not activated: {missing}"
-    for name, spec in STAGED_R8.items():
-        assert registry[name] is spec, f"{name}: registry spec diverged"
-    assert set(entry._DEFER_NEW_R8) == set(STAGED_R8), (
-        "_DEFER_NEW_R8 and the staged wave diverge"
-    )
-    overlap = sorted(set(STAGED_R8) & (set(STAGED) | set(STAGED_R7)))
-    assert not overlap, f"wave D collides with earlier waves: {overlap}"
+@pytest.mark.parametrize("name", module_ops("staged_r8"))
+def test_staged_r8_parity(spark, duck_small, parity_verdicts, name):
+    check_parity(spark, duck_small, parity_verdicts, name)
 
 
 def test_auc_agrees_with_threshold_sweep_extremes(spark):
     """Cross-check: with threshold 0 every row is predicted positive,
     so recall must be 10000 bp and precision must equal the base rate
     — derive both from eval_calibration_bins' totals."""
-    from etl_intraday_bidask_spark.operators.staged_r8 import STAGED_R8
 
-    bins = STAGED_R8["eval_calibration_bins"].spark_fn(
+    bins = REGISTRY["eval_calibration_bins"].spark_fn(
         spark, SF_SMALL
     ).collect()
     n = sum(r["n"] for r in bins)
     n_pos = sum(r["n_pos"] for r in bins)
-    auc_row = STAGED_R8["eval_auc_exact"].spark_fn(
+    auc_row = REGISTRY["eval_auc_exact"].spark_fn(
         spark, SF_SMALL
     ).collect()[0]
     assert auc_row["n_pos"] == n_pos

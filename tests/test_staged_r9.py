@@ -1,68 +1,21 @@
-"""Parity tests for wave E (operators/staged_r9.py).
+"""Wave-E tests (operators/staged_r9.py).
 
-Staged in round 6, ACTIVATED in round 9 — the registry-driven sweeps
-now cover these ops too; this file keeps the direct oracle-parity
-drive plus the activation guard that pins the round-9 window
-composition."""
+``test_staged_r9_parity`` keeps this module's per-operator test IDs;
+it calls the one registry parity check in tests/test_parity.py
+and replays that check's verdict when it has already run.
+"""
 
 from __future__ import annotations
 
 import pytest
 
-from etl_intraday_bidask_spark.operators.staged_r9 import STAGED_R9
 from tests.conftest import SF_SMALL
-from tests.test_parity import normalize
+from tests.test_parity import REGISTRY, check_parity, module_ops
 
 
-@pytest.mark.parametrize("name", sorted(STAGED_R9))
-def test_staged_r9_parity(spark, duck_small, name):
-    spec = STAGED_R9[name]
-    df = spec.spark_fn(spark, SF_SMALL)
-    s_rows, s_cols = df.collect(), df.columns
-    if spec.oracle_sql is None:
-        # rows-only by design (e.g. _metadata scans DuckDB can't
-        # express); the driver grades row count, pinned tests cover
-        # the values.
-        assert len(s_rows) >= 1
-        return
-    rel = duck_small.sql(spec.oracle_sql)
-    d_rows, d_cols = rel.fetchall(), list(rel.columns)
-    assert sorted(s_cols) == sorted(d_cols), (
-        f"{name}: columns {s_cols} vs {d_cols}"
-    )
-    assert len(s_rows) == len(d_rows), (
-        f"{name}: rows {len(s_rows)} vs {len(d_rows)}"
-    )
-    assert normalize(s_rows, s_cols) == normalize(d_rows, d_cols), (
-        f"{name}: value mismatch"
-    )
-
-
-def test_wave_e_activated():
-    """Round 9 activated wave E: all 50 staged_r9 ops are in the global
-    registry with their exact staged specs, and the wave is exactly the
-    driver's 50-slot window (every key never-graded as of r08,
-    everything else green r1-r8)."""
-    import __spark_entry__ as entry
-    from etl_intraday_bidask_spark.operators.staged_r6 import STAGED
-    from etl_intraday_bidask_spark.operators.staged_r7 import STAGED_R7
-    from etl_intraday_bidask_spark.operators.staged_r8 import STAGED_R8
-    from etl_intraday_bidask_spark.registry import load_all_operators
-
-    registry = load_all_operators()
-    assert len(STAGED_R9) == 50
-    missing = sorted(set(STAGED_R9) - set(registry))
-    assert not missing, f"wave-E ops not activated: {missing}"
-    for name, spec in STAGED_R9.items():
-        assert registry[name] is spec, f"{name}: registry spec diverged"
-    assert set(entry._DEFER_NEW_R9) == set(STAGED_R9), (
-        "_DEFER_NEW_R9 and the staged wave diverge"
-    )
-    overlap = sorted(
-        set(STAGED_R9)
-        & (set(STAGED) | set(STAGED_R7) | set(STAGED_R8))
-    )
-    assert not overlap, f"wave E collides with earlier waves: {overlap}"
+@pytest.mark.parametrize("name", module_ops("staged_r9"))
+def test_staged_r9_parity(spark, duck_small, parity_verdicts, name):
+    check_parity(spark, duck_small, parity_verdicts, name)
 
 
 def test_metadata_size_audit_matches_filesystem(spark):
@@ -74,7 +27,7 @@ def test_metadata_size_audit_matches_filesystem(spark):
     import duckdb
 
     rows = (
-        STAGED_R9["scan_metadata_size_audit"]
+        REGISTRY["scan_metadata_size_audit"]
         .spark_fn(spark, SF_SMALL)
         .collect()
     )
